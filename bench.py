@@ -849,7 +849,8 @@ def _quiesce(spark) -> None:
     garbage otherwise bill into later measurements — reproduced at
     6× inflation on the 10× cooccurrence probe after 25 dead
     checkpoints (38–44 s vs 6.6 s clean), fully restored by one
-    explicit Python+JVM collect (~0.35 s; see OPTIMIZATION_r15.md).
+    explicit Python+JVM collect (~0.35 s; introduced in commit
+    00f4de4, measured in BENCH_local_r15.json).
     Nothing is computed, cached, or reused here — this only stops
     query N's garbage from being charged to query N+1."""
     import gc

@@ -66,11 +66,17 @@ def ensure_min_partitions(df: DataFrame, min_partitions: int | None = None) -> D
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names=TABLES) -> dict[str, DataFrame]:
-    return {n: table(spark, sf_dir, n) for n in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names=TABLES) -> None:
-    """Register each table as a temp view so plans can be written in SQL."""
-    for n in names:
-        table(spark, sf_dir, n).createOrReplaceTempView(n)
+def checkpoint_guarded(
+    df: DataFrame, ctx: str, marks: tuple[str, ...], reason: str
+) -> DataFrame:
+    """``df.localCheckpoint()``, turning a per-row ``raise_error`` whose
+    message carries one of ``marks`` into ``ValueError(f"{ctx}:
+    {reason}")`` chained from the Spark exception — the refusal an
+    operator's contract promises instead of a wrapped executor error.
+    Any other failure propagates unchanged."""
+    try:
+        return df.localCheckpoint()
+    except Exception as exc:
+        if any(mark in str(exc) for mark in marks):
+            raise ValueError(f"{ctx}: {reason}") from exc
+        raise

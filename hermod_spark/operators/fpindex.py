@@ -63,6 +63,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hermod_spark import state as S
+from hermod_spark.data import checkpoint_guarded
 from hermod_spark.operators.multimodal import hamming_expr, pigeonhole_bands
 
 _META = "_fp_index_meta.json"
@@ -107,20 +108,10 @@ def _clean(
     )
 
 
-def _fp_ckpt_guarded(df: DataFrame, ctx: str) -> DataFrame:
-    """localCheckpoint surfacing the per-row length guard as the
-    ValueError the contract promises (the ``_ann_ckpt_guarded``
-    idiom)."""
-    try:
-        return df.localCheckpoint()
-    except Exception as exc:
-        if _FP_LEN_MARK in str(exc):
-            raise ValueError(
-                f"{ctx}: {_FP_LEN_MARK} mismatch — non-null hashes must "
-                f"match the index's hash_bits (see the error cause for "
-                f"the offending length)"
-            ) from exc
-        raise
+_FP_LEN_REFUSAL = (
+    f"{_FP_LEN_MARK} mismatch — non-null hashes must match the index's "
+    f"hash_bits (see the error cause for the offending length)"
+)
 
 
 def _components(clean: DataFrame, meta: dict) -> tuple[DataFrame, DataFrame]:
@@ -189,8 +180,9 @@ def save_fp_index(
     # this the build hashed every blob twice and a mutating source
     # could commit disagreeing components). The length guard fires
     # here as ValueError, before any generation write.
-    clean = _fp_ckpt_guarded(
-        _clean(hashed, hash_bits, id_col, hash_col), "save_fp_index"
+    clean = checkpoint_guarded(
+        _clean(hashed, hash_bits, id_col, hash_col),
+        "save_fp_index", (_FP_LEN_MARK,), _FP_LEN_REFUSAL,
     )
     bands, hashes = _components(clean, meta)
     _write_generation(spark, path, S.gen_name(0), bands, hashes)
@@ -236,10 +228,10 @@ def extend_fp_index(
     spark = new_hashed.sparkSession
     idx = load_fp_index(spark, path)
     meta = idx["meta"]
-    fresh = _fp_ckpt_guarded(
+    fresh = checkpoint_guarded(
         _clean(new_hashed, meta["hash_bits"], id_col, hash_col)
         .join(idx["hashes"].select("doc_id"), "doc_id", "left_anti"),
-        "extend_fp_index",
+        "extend_fp_index", (_FP_LEN_MARK,), _FP_LEN_REFUSAL,
     )
     bands, hashes = _components(fresh, meta)
     n_added = fresh.count()
@@ -476,10 +468,10 @@ def neardup_pairs_incremental(
             f"index's built radius {meta['max_hamming']} — persisted "
             f"bands are only a complete filter up to the built radius"
         )
-    snap = _fp_ckpt_guarded(
+    snap = checkpoint_guarded(
         _clean(new_hashed, meta["hash_bits"], id_col, hash_col)
         .join(index["hashes"].select("doc_id"), "doc_id", "left_anti"),
-        "neardup_pairs_incremental",
+        "neardup_pairs_incremental", (_FP_LEN_MARK,), _FP_LEN_REFUSAL,
     )
     snap_bands = pigeonhole_bands(
         snap, meta["hash_bits"], meta["max_hamming"] + 1, "doc_id", "fp"

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from hermod_spark.data import checkpoint_guarded
+
 PAGERANK_SUM_DECIMAL = "decimal(27, 18)"
 
 _NEG_WEIGHT_MARK = "negative edge weight"
@@ -57,22 +59,14 @@ def _nonneg_weight(col: Column, ctx: str) -> Column:
     )
 
 
-def _checkpoint_weight_guarded(df: DataFrame, ctx: str) -> DataFrame:
-    """``localCheckpoint`` that surfaces a :func:`_nonneg_weight`
-    per-row failure as the ``ValueError`` the refusal contract (and
-    its pinned test) promises, instead of a wrapped Spark executor
-    exception."""
-    try:
-        return df.localCheckpoint()
-    except Exception as exc:
-        if _NEG_WEIGHT_MARK in str(exc) or _ZERO_OUTW_MARK in str(exc):
-            raise ValueError(
-                f"{ctx}: {_NEG_WEIGHT_MARK} (or null / zero out-weight "
-                f"sum) — weighted graph loops are only correct for "
-                f"non-negative weights; pass validate_weights=False "
-                f"to accept the column unchecked"
-            ) from exc
-        raise
+# the refusal every weighted loop raises when a _nonneg_weight guard
+# (or the zero out-weight guard) fires inside its edge checkpoint
+_WEIGHT_MARKS = (_NEG_WEIGHT_MARK, _ZERO_OUTW_MARK)
+_WEIGHT_REFUSAL = (
+    f"{_NEG_WEIGHT_MARK} (or null / zero out-weight sum) — weighted graph "
+    f"loops are only correct for non-negative weights; pass "
+    f"validate_weights=False to accept the column unchecked"
+)
 
 
 def pagerank(
@@ -149,7 +143,7 @@ def pagerank(
     # cut at ~0.7 s off every pagerank-family construct). The weighted
     # guard rides this checkpoint, so bad weights still refuse at call
     # time exactly as before.
-    e = _checkpoint_weight_guarded(e, "pagerank")
+    e = checkpoint_guarded(e, "pagerank", _WEIGHT_MARKS, _WEIGHT_REFUSAL)
     nodes = (
         e.select(F.col("_src").alias("node"))
         .unionByName(e.select(F.col("_dst").alias("node")))
@@ -220,7 +214,7 @@ def pagerank(
                 )
             ),
         )
-    adj = _checkpoint_weight_guarded(adj, "pagerank")
+    adj = checkpoint_guarded(adj, "pagerank", _WEIGHT_MARKS, _WEIGHT_REFUSAL)
     ranks = nodes.select("node", F.col("_r0").alias("rank"))
     for i in range(iterations):
         contrib = (
@@ -532,7 +526,7 @@ def label_propagation(
             w_expr = _nonneg_weight(w_expr, "label_propagation")
         cols.append(w_expr.alias("_w"))
     e = edges.select(*cols)
-    e = _checkpoint_weight_guarded(e, "label_propagation")
+    e = checkpoint_guarded(e, "label_propagation", _WEIGHT_MARKS, _WEIGHT_REFUSAL)
     nodes = (
         e.select(F.col("_src").alias("node"))
         .unionByName(e.select(F.col("_dst").alias("node")))
@@ -622,7 +616,7 @@ def weighted_sssp(
         F.col(dst).alias("_dst"),
         w_expr.alias("_w"),
     )
-    e = _checkpoint_weight_guarded(e, "weighted_sssp")
+    e = checkpoint_guarded(e, "weighted_sssp", _WEIGHT_MARKS, _WEIGHT_REFUSAL)
     dist = sources.select(
         F.col(source_col).alias("node"),
         F.lit(0.0).cast("double").alias("distance"),

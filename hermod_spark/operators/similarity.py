@@ -28,7 +28,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from hermod_spark.data import ensure_min_partitions
+from hermod_spark.data import checkpoint_guarded, ensure_min_partitions
 
 _IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
@@ -2073,19 +2073,10 @@ _ANN_CTX = "ann index"
 _ANN_DIM_MARK = "vector dimension"
 
 
-def _ann_ckpt_guarded(df: DataFrame, ctx: str) -> DataFrame:
-    """localCheckpoint surfacing the per-row dimension guard as the
-    ValueError the contract promises (the graph.py idiom)."""
-    try:
-        return df.localCheckpoint()
-    except Exception as exc:
-        if _ANN_DIM_MARK in str(exc):
-            raise ValueError(
-                f"{ctx}: {_ANN_DIM_MARK} mismatch — vectors must match "
-                f"the index's meta['dim'] (see the error cause for the "
-                f"offending length)"
-            ) from exc
-        raise
+_ANN_DIM_REFUSAL = (
+    f"{_ANN_DIM_MARK} mismatch — vectors must match the index's "
+    f"meta['dim'] (see the error cause for the offending length)"
+)
 
 
 def _ann_components(
@@ -2290,7 +2281,9 @@ def extend_ann_index(
     # the second checkpoint is the dim-guard firing point (ValueError
     # BEFORE any generation write) and the shared input of count +
     # vector write
-    vectors = _ann_ckpt_guarded(vectors, "extend_ann_index")
+    vectors = checkpoint_guarded(
+        vectors, "extend_ann_index", (_ANN_DIM_MARK,), _ANN_DIM_REFUSAL
+    )
     n_added = vectors.count()
     if n_added == 0:
         return 0  # full redelivery: no empty generation, no commit
@@ -2454,10 +2447,14 @@ def knn_join_incremental(
     snap_bands, snap_vecs = _ann_components(
         new_only, meta, id_col, vec_col
     )
-    snap_bands = _ann_ckpt_guarded(snap_bands, "knn_join_incremental")
+    snap_bands = checkpoint_guarded(
+        snap_bands, "knn_join_incremental", (_ANN_DIM_MARK,), _ANN_DIM_REFUSAL
+    )
     # snap_vecs feeds BOTH the query-side rehydration and the neighbor
     # union — checkpoint once or the anti-join + norm pass runs twice
-    snap_vecs = _ann_ckpt_guarded(snap_vecs, "knn_join_incremental")
+    snap_vecs = checkpoint_guarded(
+        snap_vecs, "knn_join_incremental", (_ANN_DIM_MARK,), _ANN_DIM_REFUSAL
+    )
     all_bands = index["bands"].unionByName(snap_bands)
     if max_bucket is not None:
         w_b = Window.partitionBy("band_id", "bucket")

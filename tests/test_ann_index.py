@@ -256,22 +256,28 @@ def test_first_build_crash_is_replayable(spark, tmp_path):
 def test_dimension_guard_refuses_wrong_dim(spark, tmp_path):
     """r13 review: a wrong-dimension snapshot must REFUSE, not band
     silently into bucket 0 and persist a corrupted generation. The
-    guard is a per-row CASE riding the existing checkpoints."""
+    guard is a per-row CASE riding the existing checkpoints; its
+    refusal names the operator and chains the Spark failure."""
     emb = _emb(spark)
     path = str(tmp_path / "ann")
     save_ann_index(
         emb.filter(F.col("vec_id") % 10 != 7), path,
         n_planes=4, n_bands=4, dim=DIM,
     )
-    bad = spark.createDataFrame(
-        [(9_000_001, [0.5] * (DIM // 2))],
-        "vec_id long, embedding array<float>",
-    )
-    with pytest.raises(ValueError, match="dimension"):
-        extend_ann_index(bad, path)
+    for n in (DIM // 2, DIM + 1):
+        bad = spark.createDataFrame(
+            [(9_000_001, [0.5] * n)], "vec_id long, embedding array<float>"
+        )
+        with pytest.raises(
+            ValueError, match="^extend_ann_index: vector dimension mismatch"
+        ) as err:
+            extend_ann_index(bad, path)
+        assert "vector dimension" in str(err.value.__cause__)
     idx = load_ann_index(spark, path)
     assert len(idx["meta"]["generations"]) == 1  # nothing persisted
-    with pytest.raises(ValueError, match="dimension"):
+    with pytest.raises(
+        ValueError, match="^knn_join_incremental: vector dimension mismatch"
+    ):
         knn_join_incremental(bad, idx, k=5)
     # and the index itself still serves correctly
     snap = emb.filter(F.col("vec_id") % 10 == 7)

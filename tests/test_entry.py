@@ -94,8 +94,8 @@ def test_driver_window_prioritizes_unevidenced_queries():
 @pytest.fixture(scope="module")
 def built_schemas(spark):
     """Construct every queries() entry ONCE (not once per assertion)
-    and in parallel (guide §2.6; the entry's index caches are
-    lock-guarded) — both parametrized contract tests below only need
+    and in parallel (guide §2.6; the entry's IndexCache builds each
+    shared index once under a per-key lock) — both parametrized contract tests below only need
     the analyzed schema. Exceptions are stored per query so failure
     attribution stays per-name."""
     from concurrent.futures import ThreadPoolExecutor

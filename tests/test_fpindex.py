@@ -215,23 +215,32 @@ def test_wrong_length_hash_is_loud(spark, tmp_path):
     """r14 review: a NON-null hash of the wrong length is a config
     mismatch (hashers emit null for corrupt blobs), and silently
     dropping it would commit an empty/stale index with no signal —
-    save, extend, and serve all refuse with ValueError; decode
-    failures (null hash) still drop silently."""
+    save, extend, and serve all refuse with a ValueError that names
+    the operator and chains the Spark failure; decode failures (null
+    hash) still drop silently."""
     good = _hashes(spark, n=30)
     bad = spark.createDataFrame(
         [(8_000_001, "1" * 32, True)],
         "doc_id long, ahash string, decode_ok boolean",
     )
     path = str(tmp_path / "fp")
-    with pytest.raises(ValueError, match="length mismatch"):
+    with pytest.raises(
+        ValueError, match="^save_fp_index: fingerprint length mismatch"
+    ):
         save_fp_index(
             good.unionByName(bad), path, hash_bits=BITS, max_hamming=D
         )
     save_fp_index(good, path, hash_bits=BITS, max_hamming=D)
-    with pytest.raises(ValueError, match="length mismatch"):
+    with pytest.raises(
+        ValueError, match="^extend_fp_index: fingerprint length mismatch"
+    ) as err:
         extend_fp_index(bad, path)
+    assert "fingerprint length" in str(err.value.__cause__)
     idx = load_fp_index(spark, path)
-    with pytest.raises(ValueError, match="length mismatch"):
+    assert len(idx["meta"]["generations"]) == 1  # nothing persisted
+    with pytest.raises(
+        ValueError, match="^neardup_pairs_incremental: fingerprint length"
+    ):
         neardup_pairs_incremental(bad, idx).count()
     # a mixed frame whose wrong-length rows are decode FAILURES is
     # fine — null hashes drop before the guard

@@ -5,10 +5,11 @@ comparison at sf0.01; this catches parity regressions in CI-time.
 r15: the per-query work is precomputed by a module fixture that overlaps
 the independent queries from a thread pool (guide §2.6 — Spark happily
 runs concurrent jobs, and the DuckDB side runs on its own cursor per
-worker). The entry's shared index caches are themselves lock-guarded
-(`__spark_entry__._INDEX_CACHE_LOCK`), so concurrent construction is
-safe. Each parametrized test still asserts exactly its own query's
-problems, so failure attribution is unchanged from the sequential form.
+worker). The entry's shared indexes sit in one `IndexCache`
+(`hermod_spark.state`), which builds each key once under a per-key lock
+while hits stay lock-free, so concurrent construction is safe. Each
+parametrized test still asserts exactly its own query's problems, so
+failure attribution is unchanged from the sequential form.
 """
 
 from __future__ import annotations

@@ -36,16 +36,27 @@ def plan_of(spark, name: str, fresh: bool = False) -> str:
     return _PLANS[name]
 
 
+# the parametrized plan_of(spark, name) names below; _warm_plans reads
+# them here because its regex only finds string literals
+_JVM_SIDE_QUERIES = [
+    "fn_rot13", "fn_b64e", "fn_b64d", "fn_hexe", "fn_hexd", "fn_jenc", "fn_jdec",
+    "flt_topic", "xf_c2f", "xf_extract", "xf_cond", "xf_default", "xf_copy",
+    "dedup_simhash",
+]
+
+
 @pytest.fixture(scope="module", autouse=True)
 def _warm_plans(spark):
     """Build every plan this module gates ONCE, in parallel (guide
-    §2.6): plan construction is independent per query and the entry's
-    index caches are lock-guarded. Failures are swallowed here — the
-    owning test rebuilds on demand and reports the real error."""
+    §2.6): plan construction is independent per query, and the entry's
+    IndexCache builds each shared index once, with per-key locks, for
+    concurrent callers. Failures are swallowed here — the owning test
+    rebuilds on demand and reports the real error."""
     from concurrent.futures import ThreadPoolExecutor
 
     with open(__file__, encoding="utf-8") as fh:
-        names = sorted(set(re.findall(r'plan_of\(spark, "(\w+)"\)', fh.read())))
+        literals = re.findall(r'plan_of\(spark, "(\w+)"\)', fh.read())
+    names = sorted(set(literals) | set(_JVM_SIDE_QUERIES))
 
     def one(name):
         try:
@@ -138,12 +149,7 @@ def test_embedding_neardups_no_cartesian(spark):
     assert "CartesianProduct" not in plan
 
 
-@pytest.mark.parametrize(
-    "name",
-    ["fn_rot13", "fn_b64e", "fn_b64d", "fn_hexe", "fn_hexd", "fn_jenc", "fn_jdec",
-     "flt_topic", "xf_c2f", "xf_extract", "xf_cond", "xf_default", "xf_copy",
-     "dedup_simhash"],
-)
+@pytest.mark.parametrize("name", _JVM_SIDE_QUERIES)
 def test_scalar_and_transform_paths_stay_jvm_side(spark, name):
     """Everything except HMAC and the xf_new envelope must run without
     Python."""
