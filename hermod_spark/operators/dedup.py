@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from hermod_spark.data import ensure_min_partitions
 from hermod_spark.functions.text import fingerprint, tokens
+from hermod_spark.state import hadoop_fs
 
 
 def exact_key(col: Column | str, *, canonical: bool = False) -> Column:
@@ -1840,7 +1841,7 @@ def extend_dedup_index(
     meta = index["meta"]
     num_hashes, bands, w = meta["num_hashes"], meta["bands"], meta["w"]
 
-    fs, jpath, jvm = _hadoop_fs(spark, path)
+    fs, jpath, jvm = hadoop_fs(spark, path)
     name = jpath.getName()
     parent = jpath.getParent()
     now_ms = spark._jvm.java.lang.System.currentTimeMillis()
@@ -1881,22 +1882,11 @@ def extend_dedup_index(
     return n_added
 
 
-def _hadoop_fs(spark, path: str):
-    """(FileSystem, Path, jvm) for ``path`` via the session's Hadoop
-    conf — directory maintenance must use the SAME filesystem Spark
-    writes to (driver-local os.* silently targets the wrong FS on a
-    cluster)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, fs.makeQualified(jpath), jvm
-
-
 def _index_recovery_candidates(spark, path: str) -> list[str]:
     """`.old-<name>-*` siblings of a missing index — the previous
     index a crashed extend swap left aside (see extend_dedup_index)."""
     try:
-        fs, jpath, _ = _hadoop_fs(spark, path)
+        fs, jpath, _ = hadoop_fs(spark, path)
         name = jpath.getName()
         parent = jpath.getParent()
         if parent is None or not fs.exists(parent):

@@ -7,8 +7,8 @@ and re-band every blob per run — fine for one ad-hoc audit, wrong at
 the artifact (VERDICT r13 #3 gap: text and embedding near-dup already
 serve from persisted indexes; the multimodal family did not). This
 module persists the (id, fingerprint) table plus its pigeonhole band
-table as delta generations under the shared atomic-meta machinery
-(``hermod_spark.state`` — the text/ANN index layout), and serves
+table as a ``state.GenerationStore`` delta chain (its docstring holds
+the admit, crash-window and reader-staleness contract), and serves
 snapshot-vs-corpus near-dup pairs with only the SNAPSHOT hashed and
 banded at serve time (the ``knn_join_incremental`` discipline).
 
@@ -42,11 +42,6 @@ Design notes, each a 100 TB posture:
   is inside the ≤ d ball the bands are complete for) but never a
   larger one — refused, because pairs at hamming in (d, d'] can
   disagree on every persisted band.
-- **Deltas, extends, crash windows, sink**: verbatim the
-  ``textindex``/``similarity`` machinery — id-disjoint generations,
-  anti-join admit (idempotent ⇒ the maintenance sink is exactly-once
-  without a batch ledger), init-meta first-build discipline, single
-  writer, retention for the reader-staleness window.
 
 The banding and hamming expressions are imported from
 ``multimodal.pigeonhole_bands`` / ``multimodal.hamming_expr`` — one
@@ -56,19 +51,19 @@ parity test.
 
 from __future__ import annotations
 
-import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hermod_spark import state as S
 from hermod_spark.data import checkpoint_guarded
 from hermod_spark.operators.multimodal import hamming_expr, pigeonhole_bands
+from hermod_spark.state import GenerationStore
 
-_META = "_fp_index_meta.json"
-_CTX = "fingerprint index"
-_EMPTY = {"generations": [], "seq": -1}
+_STORE = GenerationStore(
+    "_fp_index_meta.json", "fingerprint index",
+    {"bands": ("band", "bits"), "hashes": ()},
+)
 
 
 _FP_LEN_MARK = "fingerprint length"
@@ -114,30 +109,12 @@ _FP_LEN_REFUSAL = (
 )
 
 
-def _components(clean: DataFrame, meta: dict) -> tuple[DataFrame, DataFrame]:
-    """(bands, hashes) for one id-disjoint admitted batch."""
+def _components(clean: DataFrame, meta: dict) -> dict[str, DataFrame]:
+    """bands + hashes for one id-disjoint admitted batch."""
     bands = pigeonhole_bands(
         clean, meta["hash_bits"], meta["max_hamming"] + 1, "doc_id", "fp"
     ).select("doc_id", "band", "bits")
-    return bands, clean
-
-
-def _write_generation(
-    spark: SparkSession, root: str, gen: str, bands: DataFrame,
-    hashes: DataFrame,
-) -> None:
-    """One immutable generation dir; bands cluster by (band, bits) —
-    the serve-side join key — so row-group stats prune a
-    band-filtered read. mode=overwrite because a crashed prior
-    attempt of the SAME seq may have left an unreferenced orphan."""
-    gdir = os.path.join(root, gen)
-    (
-        bands.repartition(F.col("band"), F.col("bits"))
-        .sortWithinPartitions("band", "bits")
-        .write.mode("overwrite")
-        .parquet(os.path.join(gdir, "bands"))
-    )
-    hashes.write.mode("overwrite").parquet(os.path.join(gdir, "hashes"))
+    return {"bands": bands, "hashes": clean}
 
 
 def save_fp_index(
@@ -153,60 +130,38 @@ def save_fp_index(
     """Create the index at ``path`` from a hasher output frame (e.g.
     ``image_ahash`` / ``audio_fingerprint`` — any (id, hash,
     decode_ok) source; the index is hash-source agnostic like the
-    banding it persists). Init meta, generation 0, meta commit — the
-    init meta makes a first-build crash replayable. Refuses over an
-    existing committed index (:func:`extend_fp_index` admits more)."""
+    banding it persists). Refuses over an existing committed index
+    (:func:`extend_fp_index` admits more)."""
     if hash_bits < max_hamming + 1:
         raise ValueError(
             f"fp index: hash_bits={hash_bits} < {max_hamming + 1} bands"
         )
-    spark = hashed.sparkSession
-    meta = S.read_meta(spark, path, _META, _CTX, _EMPTY)
-    if meta["generations"]:
-        raise IOError(
-            f"fp index at {path!r} already has committed generations "
-            f"{meta['generations']} — extend_fp_index admits new rows"
+    identity = {"hash_bits": hash_bits, "max_hamming": max_hamming}
+
+    def build():
+        # checkpoint ONCE: the Arrow decode+hash chain upstream is the
+        # expensive pass, and bands + hashes + count must come from one
+        # materialization (r14 review — without this the build hashed
+        # every blob twice and a mutating source could commit
+        # disagreeing components). The length guard fires here as
+        # ValueError, before any generation write.
+        clean = checkpoint_guarded(
+            _clean(hashed, hash_bits, id_col, hash_col),
+            "save_fp_index", (_FP_LEN_MARK,), _FP_LEN_REFUSAL,
         )
-    meta = {
-        "generations": [S.gen_name(0)],
-        "seq": 0,
-        "hash_bits": hash_bits,
-        "max_hamming": max_hamming,
-    }
-    S.write_meta(spark, path, _META, {**meta, "generations": [], "seq": -1})
-    # checkpoint ONCE: the Arrow decode+hash chain upstream is the
-    # expensive pass, and bands + hashes + count must come from one
-    # materialization (the extend discipline; r14 review — without
-    # this the build hashed every blob twice and a mutating source
-    # could commit disagreeing components). The length guard fires
-    # here as ValueError, before any generation write.
-    clean = checkpoint_guarded(
-        _clean(hashed, hash_bits, id_col, hash_col),
-        "save_fp_index", (_FP_LEN_MARK,), _FP_LEN_REFUSAL,
+        return _components(clean, identity)
+
+    _STORE.create(
+        hashed.sparkSession, path, identity, build,
+        stats=lambda gen, _: {"n_rows": int(gen["hashes"].count())},
+        on_before_commit=on_before_commit,
     )
-    bands, hashes = _components(clean, meta)
-    _write_generation(spark, path, S.gen_name(0), bands, hashes)
-    n0 = clean.count()
-    if on_before_commit is not None:
-        on_before_commit(0)
-    S.write_meta(spark, path, _META, {**meta, "n_rows": int(n0)})
 
 
 def load_fp_index(spark: SparkSession, path: str) -> dict:
     """{"bands", "hashes", "meta", "path"} over the committed
-    generation chain (generations are id-disjoint; the union IS the
-    index)."""
-    meta = S.read_meta(spark, path, _META, _CTX, _EMPTY)
-    if not meta["generations"]:
-        raise IOError(f"fp index at {path!r} has no committed data")
-    bdirs = [os.path.join(path, g, "bands") for g in meta["generations"]]
-    hdirs = [os.path.join(path, g, "hashes") for g in meta["generations"]]
-    return {
-        "bands": spark.read.parquet(*bdirs),
-        "hashes": spark.read.parquet(*hdirs),
-        "meta": meta,
-        "path": path,
-    }
+    generation chain."""
+    return _STORE.load(spark, path)
 
 
 def extend_fp_index(
@@ -217,45 +172,27 @@ def extend_fp_index(
     hash_col: str = "ahash",
     on_before_commit: Callable[[int], None] | None = None,
 ) -> int:
-    """Admit a snapshot: hash rows NEW to the index band into one
-    delta generation (anti-join on the index's id table — index-sized,
-    never re-banding the corpus). Idempotent under crash-re-run and
-    redelivery exactly like ``textindex.extend_text_index``; SINGLE
-    WRITER per index. Returns the number of rows added. The cleaned
+    """Admit a snapshot: hash rows NEW to the index (anti-join on its
+    id table — index-sized, never re-banding the corpus) band into one
+    delta generation. Returns the number of rows added. The cleaned
     anti-joined snapshot is checkpointed ONCE so the count and both
     generation writes share one materialization (the ADVICE r13
     discipline)."""
     spark = new_hashed.sparkSession
-    idx = load_fp_index(spark, path)
+    idx = _STORE.load(spark, path)
     meta = idx["meta"]
     fresh = checkpoint_guarded(
         _clean(new_hashed, meta["hash_bits"], id_col, hash_col)
         .join(idx["hashes"].select("doc_id"), "doc_id", "left_anti"),
         "extend_fp_index", (_FP_LEN_MARK,), _FP_LEN_REFUSAL,
     )
-    bands, hashes = _components(fresh, meta)
     n_added = fresh.count()
-    if n_added == 0:
-        return 0  # full redelivery: no empty generation, no commit
-    seq = meta["seq"] + 1
-    gen = S.gen_name(seq)
-    _write_generation(spark, path, gen, bands, hashes)
-    if on_before_commit is not None:
-        on_before_commit(seq)
-    n_before = meta.get("n_rows")
-    if n_before is None:  # legacy meta: upgrade once
-        n_before = idx["hashes"].count()
-    S.write_meta(
-        spark,
-        path,
-        _META,
-        {
-            **meta,
-            "generations": meta["generations"] + [gen],
-            "seq": seq,
-            "n_rows": int(n_before) + int(n_added),
-        },
-    )
+    if n_added:
+        _STORE.append(
+            spark, idx, _components(fresh, meta),
+            extra={"n_rows": meta["n_rows"] + int(n_added)},
+            on_before_commit=on_before_commit,
+        )
     return n_added
 
 
@@ -271,61 +208,35 @@ def fp_index_maintenance_sink(
     on_before_commit: Callable[[int], None] | None = None,
 ):
     """foreachBatch function maintaining the fingerprint index as
-    hashed rows STREAM in — exactly-once without a batch ledger via
-    extend's id-idempotency (the ``text_index_maintenance_sink``
-    argument verbatim). The first batch creates the index; the
-    banding identity args apply only then. Intra-batch duplicate ids
-    collapse keep-any. ``compact_every=N`` folds the chain after
-    every Nth batch (the self-maintaining-sink rule shared by all
-    three index sinks); ``retain`` is the fold's reader-staleness
-    window."""
-
-    def _fn(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch = batch_df.dropDuplicates([id_col])
-        if batch.isEmpty():
-            return  # stay virgin until the first row (the ANN sink rule)
-        meta = S.read_meta(spark, path, _META, _CTX, _EMPTY)
-        if not meta["generations"]:
-            save_fp_index(
-                batch, path, hash_bits=hash_bits, max_hamming=max_hamming,
-                id_col=id_col, hash_col=hash_col,
-                on_before_commit=on_before_commit,
-            )
-        else:
-            extend_fp_index(
-                batch, path, id_col=id_col, hash_col=hash_col,
-                on_before_commit=on_before_commit,
-            )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            compact_fp_index(path, spark, retain=retain)
-
-    return _fn
+    hashed rows STREAM in (``GenerationStore.maintenance_sink``). The
+    banding identity args apply only to the first batch, which creates
+    the index. ``compact_every=N`` folds the chain after every Nth
+    batch; ``retain`` is that fold's reader-staleness window."""
+    return _STORE.maintenance_sink(
+        path,
+        id_col=id_col,
+        create=lambda batch: save_fp_index(
+            batch, path, hash_bits=hash_bits, max_hamming=max_hamming,
+            id_col=id_col, hash_col=hash_col,
+            on_before_commit=on_before_commit,
+        ),
+        extend=lambda batch: extend_fp_index(
+            batch, path, id_col=id_col, hash_col=hash_col,
+            on_before_commit=on_before_commit,
+        ),
+        compact=lambda spark: compact_fp_index(path, spark, retain=retain),
+        compact_every=compact_every,
+    )
 
 
 def compact_fp_index(
     path: str, spark: SparkSession, *, retain: int = 0
 ) -> int:
-    """Fold the generation chain into one generation — the
-    ``compact_text_index`` contract including the ``retain``
-    reader-staleness window. No re-banding lever here: the band count
-    is max_hamming+1 by the pigeonhole argument at every corpus size."""
-    idx = load_fp_index(spark, path)
-    meta = idx["meta"]
-    if len(meta["generations"]) <= 1:
-        S.prune_generations(
-            spark, path, 1 + max(0, retain),
-            protect=set(meta["generations"]),
-        )
-        return 0
-    seq = meta["seq"] + 1
-    gen = S.gen_name(seq)
-    _write_generation(spark, path, gen, idx["bands"], idx["hashes"])
-    S.write_meta(
-        spark, path, _META, {**meta, "generations": [gen], "seq": seq}
-    )
-    S.prune_generations(spark, path, 1 + max(0, retain), protect={gen})
-    return len(meta["generations"])
+    """Fold the generation chain into one generation and prune the old
+    chain past ``retain``. Returns the number of generations folded.
+    No re-banding lever here: the band count is max_hamming+1 by the
+    pigeonhole argument at every corpus size."""
+    return _STORE.compact(spark, _STORE.load(spark, path), retain=retain)
 
 
 def distinct_hash_neardup_pairs(

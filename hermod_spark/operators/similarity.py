@@ -22,6 +22,7 @@ Vector conversion in the hot path.
 
 from __future__ import annotations
 
+import os
 import re
 
 import numpy as np
@@ -29,6 +30,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from hermod_spark.data import checkpoint_guarded, ensure_min_partitions
+from hermod_spark.state import GenerationStore
 
 _IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
@@ -2044,8 +2046,8 @@ def knn_split_leakage(
 # needs the banding PERSISTED (VERDICT r12 next-round #2), mirroring
 # the dedup family's `dedup_incremental_index` discipline: the index
 # is never rebuilt, and serve work grows with the snapshot. Layout
-# (delta generations + atomic meta, the shared machinery in
-# `hermod_spark.state` the text index also uses)::
+# (a `state.GenerationStore` chain; its docstring holds the admit,
+# crash-window and reader-staleness contract)::
 #
 #     <path>/_ann_index_meta.json   # generations, seq, and the
 #                                   # banding identity (n_planes,
@@ -2066,8 +2068,10 @@ def knn_split_leakage(
 # in-place mutation; serves/extends pick the new identity up on their
 # next load. Measured at sf1: serve 54.1 → 7.7 s (SCALE.md r14).
 
-_ANN_META = "_ann_index_meta.json"
-_ANN_CTX = "ann index"
+_ANN_STORE = GenerationStore(
+    "_ann_index_meta.json", "ann index",
+    {"bands": ("band_id", "bucket"), "vectors": ()},
+)
 
 
 _ANN_DIM_MARK = "vector dimension"
@@ -2149,24 +2153,11 @@ def save_ann_index(
     dim: int | None = None,
     on_before_commit=None,
 ) -> None:
-    """Create the persisted band index at ``path`` from the corpus —
-    init meta, generation 0, meta commit (crash-window-safe at every
-    step: the init meta makes a first-build crash replayable instead
-    of tripping the vanished-meta refusal). Refuses over an existing
-    committed index (use :func:`extend_ann_index` to admit
-    snapshots). Pass ``dim`` (table metadata) to keep construction
-    lazy. ``on_before_commit`` is the crash-window test seam."""
-    from hermod_spark import state as S
-
+    """Create the persisted band index at ``path`` from the corpus.
+    Refuses over an existing committed index (use
+    :func:`extend_ann_index` to admit snapshots). Pass ``dim`` (table
+    metadata) to keep construction lazy."""
     spark = embeddings.sparkSession
-    meta = S.read_meta(
-        spark, path, _ANN_META, _ANN_CTX, {"generations": [], "seq": -1}
-    )
-    if meta["generations"]:
-        raise IOError(
-            f"ann index at {path!r} already has committed generations "
-            f"{meta['generations']} — extend_ann_index admits snapshots"
-        )
     if dim is None:
         row = embeddings.select(vec_col).first()
         if row is None or row[0] is None:
@@ -2175,76 +2166,33 @@ def save_ann_index(
                 "an empty frame (or a null first vector) — pass dim="
             )
         dim = len(row[0])
-    meta = {
-        "generations": [S.gen_name(0)],
-        "seq": 0,
-        "n_planes": n_planes,
-        "n_bands": n_bands,
-        "seed": seed,
-        "dim": dim,
+    identity = {
+        "n_planes": n_planes, "n_bands": n_bands, "seed": seed, "dim": dim,
     }
-    # INIT meta (empty generations) lands BEFORE the first generation
-    # write: a crash between gen-0 and the final commit then leaves a
-    # committed-empty meta + an unreferenced orphan the re-run
-    # overwrites — without it, read_meta's vanished-meta refusal would
-    # permanently brick the root on a first-build crash (r13 review)
-    S.write_meta(
-        spark, path, _ANN_META, {**meta, "generations": [], "seq": -1}
+
+    def build():
+        bands, vectors = _ann_components(embeddings, identity, id_col, vec_col)
+        return {"bands": bands, "vectors": vectors}
+
+    _ANN_STORE.create(
+        spark, path, identity, build,
+        # exact corpus size rides the meta (parquet-footer count over
+        # the just-written generation — metadata-only, no data read):
+        # it is what compaction's occupancy-triggered re-banding sizes
+        # the new plane count from
+        stats=lambda _, gdir: {
+            "n_vectors": int(
+                spark.read.parquet(os.path.join(gdir, "vectors")).count()
+            )
+        },
+        on_before_commit=on_before_commit,
     )
-    bands, vectors = _ann_components(embeddings, meta, id_col, vec_col)
-    _write_ann_generation(spark, path, S.gen_name(0), bands, vectors)
-    # exact corpus size rides the meta (parquet-footer count over the
-    # just-written generation — metadata-only, no data read): it is
-    # what compaction's occupancy-triggered re-banding sizes the new
-    # plane count from
-    import os as _os
-
-    n0 = spark.read.parquet(
-        _os.path.join(path, S.gen_name(0), "vectors")
-    ).count()
-    meta = {**meta, "n_vectors": int(n0)}
-    if on_before_commit is not None:
-        on_before_commit(0)
-    S.write_meta(spark, path, _ANN_META, meta)
-
-
-def _write_ann_generation(spark, path, gen, bands, vectors) -> None:
-    import os
-
-    gdir = os.path.join(path, gen)
-    # band rows cluster by (band_id, bucket): the serve-side join key
-    # — co-located candidates and row-group stats that prune a
-    # bucket-filtered read
-    (
-        bands.repartition(F.col("band_id"), F.col("bucket"))
-        .sortWithinPartitions("band_id", "bucket")
-        .write.mode("overwrite")
-        .parquet(os.path.join(gdir, "bands"))
-    )
-    vectors.write.mode("overwrite").parquet(os.path.join(gdir, "vectors"))
 
 
 def load_ann_index(spark, path: str) -> dict:
     """{"bands", "vectors", "meta", "path"} over the committed
-    generation chain (generations are id-disjoint; the union IS the
-    index)."""
-    import os
-
-    from hermod_spark import state as S
-
-    meta = S.read_meta(
-        spark, path, _ANN_META, _ANN_CTX, {"generations": [], "seq": -1}
-    )
-    if not meta["generations"]:
-        raise IOError(f"ann index at {path!r} has no committed data")
-    bdirs = [os.path.join(path, g, "bands") for g in meta["generations"]]
-    vdirs = [os.path.join(path, g, "vectors") for g in meta["generations"]]
-    return {
-        "bands": spark.read.parquet(*bdirs),
-        "vectors": spark.read.parquet(*vdirs),
-        "meta": meta,
-        "path": path,
-    }
+    generation chain."""
+    return _ANN_STORE.load(spark, path)
 
 
 def extend_ann_index(
@@ -2255,17 +2203,12 @@ def extend_ann_index(
     vec_col: str = "embedding",
     on_before_commit=None,
 ) -> int:
-    """Admit a snapshot into the index: band the NEW vectors only
+    """Admit a snapshot into the index: band the vectors NEW to it
     (anti-join on the index's id column — index-sized, never
-    re-banding the corpus), write them as one delta generation,
-    commit the meta pointer. Returns the number of vectors added.
-    Idempotent under crash-re-run and redelivery exactly like
-    ``textindex.extend_text_index`` (same machinery); SINGLE WRITER
-    per index. ``on_before_commit`` is the crash-window test seam."""
-    from hermod_spark import state as S
-
+    re-banding the corpus) as one delta generation. Returns the number
+    of vectors added."""
     spark = new_df.sparkSession
-    idx = load_ann_index(spark, path)
+    idx = _ANN_STORE.load(spark, path)
     meta = idx["meta"]
     fresh = new_df.select(id_col, vec_col).join(
         idx["vectors"].select(F.col("corpus_id").alias(id_col)),
@@ -2285,29 +2228,18 @@ def extend_ann_index(
         vectors, "extend_ann_index", (_ANN_DIM_MARK,), _ANN_DIM_REFUSAL
     )
     n_added = vectors.count()
-    if n_added == 0:
-        return 0  # full redelivery: no empty generation, no commit
-    seq = meta["seq"] + 1
-    gen = S.gen_name(seq)
-    _write_ann_generation(spark, path, gen, bands, vectors)
-    if on_before_commit is not None:
-        on_before_commit(seq)
+    if not n_added:
+        return 0
     # legacy metas (pre-r14) carry no n_vectors: upgrade once with an
     # index-sized count so occupancy-triggered re-banding can size
     # the plane count on any index
     n_before = meta.get("n_vectors")
     if n_before is None:
         n_before = idx["vectors"].count()
-    S.write_meta(
-        spark,
-        path,
-        _ANN_META,
-        {
-            **meta,
-            "generations": meta["generations"] + [gen],
-            "seq": seq,
-            "n_vectors": int(n_before) + int(n_added),
-        },
+    _ANN_STORE.append(
+        spark, idx, {"bands": bands, "vectors": vectors},
+        extra={"n_vectors": int(n_before) + int(n_added)},
+        on_before_commit=on_before_commit,
     )
     return n_added
 
@@ -2327,79 +2259,45 @@ def ann_index_maintenance_sink(
     on_before_commit=None,
 ):
     """foreachBatch function maintaining the persisted ANN band index
-    as embeddings STREAM in (VERDICT r13 #2 — the text index and the
-    rollup already have maintenance sinks; this closes the ANN gap).
+    as embeddings STREAM in (``GenerationStore.maintenance_sink``).
     Use::
 
         q = (emb.writeStream
              .foreachBatch(ann_index_maintenance_sink("/idx/ann"))
              .option("checkpointLocation", ckpt).start())
 
-    Pass ``compact_every=N`` to run :func:`compact_ann_index` after
-    every Nth batch's admit (folding the generation chain the stream
-    grows), and ``max_occupancy`` to let those compactions re-band on
-    occupancy growth — together they make the index fully
-    self-maintaining: a long-running stream admits deltas, folds its
-    own chain, and rotates the banding identity when the corpus
-    outgrows it, all under the SINGLE-WRITER contract (compaction runs
-    in the sink, between admits, never concurrently with one).
-    Compaction is deliberately NOT crash-coupled to the batch: a crash
-    between admit and compact just defers the fold to the next trigger
-    (compaction is idempotent maintenance, not data).
+    ``compact_every=N`` runs :func:`compact_ann_index` after every Nth
+    batch, and ``max_occupancy`` lets those compactions re-band on
+    occupancy growth — together the index is fully self-maintaining:
+    a long-running stream admits deltas, folds its own chain, and
+    rotates the banding identity when the corpus outgrows it.
 
-    Exactly-once WITHOUT a batch-id ledger, the
-    ``textindex.text_index_maintenance_sink`` argument verbatim:
-    :func:`extend_ann_index` is id-idempotent (admitted ids anti-join
-    away on redelivery; an empty redelivery commits nothing), so
-    at-least-once foreachBatch delivery composes to exactly-once by
-    construction. A crash between generation write and meta commit
-    leaves an unreferenced orphan the replay overwrites; a batch-0
-    crash replays through the init meta (committed-empty) that
-    :func:`save_ann_index` writes before gen-0.
-
-    The first batch creates the index — the banding identity
-    (``n_planes``/``n_bands``/``seed``/``dim``) passed here applies
-    ONLY then; afterwards the meta IS the identity (including any
-    occupancy-triggered re-band a concurrent-free
-    :func:`compact_ann_index` maintenance pass committed between
-    micro-batches — extends re-derive planes from the meta, so the
-    stream keeps admitting correctly across a rotation). Duplicate
-    ids WITHIN a batch collapse keep-any (a stream redelivering a
-    vector mid-batch carries identical payload). SINGLE WRITER per
-    index root: schedule compaction in the same maintenance process,
-    between batches."""
-    from hermod_spark import state as S
-
-    def _fn(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch = batch_df.select(id_col, vec_col).dropDuplicates([id_col])
-        if batch.isEmpty():
-            # empty micro-batches are common before data arrives; on a
-            # virgin root building from one would also make the dim
-            # inference crash-loop the stream (r14 review) — the index
-            # stays virgin until the first row
-            return
-        meta = S.read_meta(
-            spark, path, _ANN_META, _ANN_CTX,
-            {"generations": [], "seq": -1},
-        )
-        if not meta["generations"]:
-            save_ann_index(
-                batch, path, n_planes=n_planes, n_bands=n_bands,
-                seed=seed, id_col=id_col, vec_col=vec_col, dim=dim,
-                on_before_commit=on_before_commit,
-            )
-        else:
-            extend_ann_index(
-                batch, path, id_col=id_col, vec_col=vec_col,
-                on_before_commit=on_before_commit,
-            )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            compact_ann_index(
-                path, spark, max_occupancy=max_occupancy, retain=retain
-            )
-
-    return _fn
+    The banding identity (``n_planes``/``n_bands``/``seed``/``dim``)
+    passed here applies ONLY to the first batch, which creates the
+    index; afterwards the meta IS the identity, including any
+    re-band a compaction committed between micro-batches — extends
+    re-derive planes from the meta, so the stream keeps admitting
+    correctly across a rotation. An empty first batch leaves the root
+    virgin, which also keeps the dim inference from crash-looping the
+    stream (r14 review)."""
+    return _ANN_STORE.maintenance_sink(
+        path,
+        id_col=id_col,
+        cols=[id_col, vec_col],
+        create=lambda batch: save_ann_index(
+            batch, path, n_planes=n_planes, n_bands=n_bands, seed=seed,
+            id_col=id_col, vec_col=vec_col, dim=dim,
+            on_before_commit=on_before_commit,
+        ),
+        extend=lambda batch: extend_ann_index(
+            batch, path, id_col=id_col, vec_col=vec_col,
+            on_before_commit=on_before_commit,
+        ),
+        compact=lambda spark: compact_ann_index(
+            path, spark, max_occupancy=max_occupancy, retain=retain
+        ),
+        compact_every=compact_every,
+    )
 
 
 def knn_join_incremental(
@@ -2604,58 +2502,33 @@ def compact_ann_index(
     fresh build's band side, which is exactly what compaction's
     off-serve-path cadence is for.
 
-    READER-STALENESS WINDOW: ``retain`` keeps the N newest old
-    generations past the swap for in-flight readers of a pre-swap
-    ``load_ann_index`` (the ``compact_text_index`` contract); the
-    next compaction collects them."""
-    from hermod_spark import state as S
-
-    idx = load_ann_index(spark, path)
+    ``retain`` is the fold's reader-staleness window
+    (``state.GenerationStore``)."""
+    idx = _ANN_STORE.load(spark, path)
     meta = idx["meta"]
-    n_gens = len(meta["generations"])
-    new_planes = meta["n_planes"]
-    occ = None
+    extra = {"n_planes": meta["n_planes"]}
     if max_occupancy is not None:
         occ = ann_occupancy(idx)
+        extra["occupancy"] = occ
         if occ["mean"] > max_occupancy:
-            new_planes = max(
+            extra["n_planes"] = max(
                 meta["n_planes"],
                 planes_for_occupancy(occ["measured_at_n"], max_occupancy),
             )
-    rebanded = new_planes != meta["n_planes"]
-    if n_gens <= 1 and not rebanded:
-        # no fold, but collect generations a prior retain>0 run left
-        S.prune_generations(
-            spark, path, 1 + max(0, retain),
-            protect=set(meta["generations"]),
-        )
-        return 0
-    seq = meta["seq"] + 1
-    gen = S.gen_name(seq)
-    vectors = idx["vectors"]
-    if rebanded:
+    fold = None
+    if extra["n_planes"] != meta["n_planes"]:
         # band the persisted vectors under the NEW identity — vectors
         # are already dim-guarded, norms already computed; only the
         # band table is rebuilt
-        bands = _ann_components(
-            vectors, {**meta, "n_planes": new_planes}, "corpus_id", "vec"
-        )[0]
-    else:
-        bands = idx["bands"]
-    _write_ann_generation(spark, path, gen, bands, vectors)
-    if on_before_commit is not None:
-        on_before_commit(seq)
-    new_meta = {
-        **meta,
-        "generations": [gen],
-        "seq": seq,
-        "n_planes": new_planes,
-    }
-    if occ is not None:
-        new_meta["occupancy"] = occ
-    S.write_meta(spark, path, _ANN_META, new_meta)
-    S.prune_generations(spark, path, 1 + max(0, retain), protect={gen})
-    return n_gens
+        fold = {
+            "bands": _ann_components(
+                idx["vectors"], {**meta, **extra}, "corpus_id", "vec"
+            )[0]
+        }
+    return _ANN_STORE.compact(
+        spark, idx, retain=retain, fold=fold, extra=extra,
+        on_before_commit=on_before_commit,
+    )
 
 
 def semantic_decontaminate(

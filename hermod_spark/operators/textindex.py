@@ -6,8 +6,9 @@ from raw text on every run — fine for one ad-hoc panel, wrong at
 artifact (VERDICT r12 next-round #1), exactly as the persisted LSH
 corpus index already is for dedup (``dedup.save_dedup_index``).
 
-Index layout (delta generations under one root, committed by the
-shared atomic-meta idiom in ``hermod_spark.state``)::
+Index layout (a ``state.GenerationStore`` chain — its docstring holds
+the id-disjoint delta, idempotent-admit, crash-window and
+reader-staleness contract this index relies on)::
 
     <path>/_text_index_meta.json      # {"generations": [...], "seq": n}
     <path>/gen-000000000/postings/    # (tok, doc_id, tf, dl) parquet
@@ -16,16 +17,6 @@ shared atomic-meta idiom in ``hermod_spark.state``)::
 
 Design decisions, each a 100 TB posture:
 
-- **Deltas, not rewrites.** ``extend_text_index`` tokenizes and
-  writes ONLY the admitted snapshot's postings as a new generation —
-  O(snapshot) work with the existing index untouched (the
-  ``dedup_incremental_index`` discipline: the index is never
-  rebuilt). Generations are doc-disjoint by construction (ids already
-  indexed are anti-joined away, which also makes a crashed extend's
-  re-run idempotent), so the logical index is a plain multi-path
-  parquet read — no merge aggregation on the serve path.
-  ``compact_text_index`` folds the chain back to one generation when
-  the file count warrants it.
 - **dl denormalized into postings.** BM25's length normalization
   needs dl per (doc, term); carrying it in the posting row costs one
   long per posting and saves the serve path an N-row doclens join.
@@ -35,13 +26,6 @@ Design decisions, each a 100 TB posture:
   driver-side list) pushes into the parquet scan and row-group
   min/max statistics skip everything but the query terms' slivers —
   the inverted-index access path, expressed as parquet + pushdown.
-- **Readers never blocked.** Committed generations are immutable and
-  the meta swap is rename-aside atomic (``hermod_spark.state``), the
-  versioned-pointer answer to the reader-outage window documented on
-  ``extend_dedup_index``. A crash between generation write and meta
-  commit leaves an unreferenced orphan directory the re-run
-  overwrites; a vanished meta over committed generations REFUSES
-  rather than serving an empty index.
 
 Serve (``bm25_topk_indexed``) matches ``textops.bm25_topk``
 bit-for-bit: both paths share the query tokenization and the scoring
@@ -54,19 +38,19 @@ never touched (plan-gated in tests: zero FileScan of the corpus).
 
 from __future__ import annotations
 
-import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hermod_spark import state as S
 from hermod_spark.functions import text as X
 from hermod_spark.operators.textops import bm25_query_terms, bm25_score_rank
+from hermod_spark.state import GenerationStore
 
-_META = "_text_index_meta.json"
-_EMPTY = {"generations": [], "seq": -1}
-_CTX = "text index"
+_STORE = GenerationStore(
+    "_text_index_meta.json", "text index",
+    {"postings": ("tok",), "doclens": ()},
+)
 
 
 def _tokenized(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -82,18 +66,12 @@ def _tokenized(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def _components(
-    df: DataFrame, text_col: str, id_col: str
-) -> tuple[DataFrame, DataFrame]:
-    """(postings, doclens) for one document batch: tokenize ONCE per
-    row (the scan's CPU cost), then explode → (doc, term) counts.
-    Docs that tokenize to nothing still appear in doclens (they count
-    in N and avgdl, exactly as the direct path's corpus agg counts
-    them) but emit no postings."""
-    return _components_from_base(_tokenized(df, text_col, id_col))
-
-
-def _components_from_base(base: DataFrame) -> tuple[DataFrame, DataFrame]:
+def _components(base: DataFrame) -> dict[str, DataFrame]:
+    """postings + doclens for one document batch from its tokenized
+    base: tokenize ONCE per row (the scan's CPU cost), then explode →
+    (doc, term) counts. Docs that tokenize to nothing still appear in
+    doclens (they count in N and avgdl, exactly as the direct path's
+    corpus agg counts them) but emit no postings."""
     doclens = base.select("doc_id", F.size("_tk").alias("dl"))
     postings = (
         base.select(
@@ -105,25 +83,7 @@ def _components_from_base(base: DataFrame) -> tuple[DataFrame, DataFrame]:
         .groupBy("tok", "doc_id")
         .agg(F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl"))
     )
-    return postings, doclens
-
-
-def _write_generation(
-    spark: SparkSession, root: str, gen: str, postings: DataFrame,
-    doclens: DataFrame,
-) -> None:
-    """One immutable generation dir; mode=overwrite because a crashed
-    prior attempt of the SAME seq may have left a partial orphan that
-    was never referenced by meta. Postings cluster by token so the
-    serve-side IN-predicate prunes row groups."""
-    gdir = os.path.join(root, gen)
-    (
-        postings.repartition(F.col("tok"))
-        .sortWithinPartitions("tok", "doc_id")
-        .write.mode("overwrite")
-        .parquet(os.path.join(gdir, "postings"))
-    )
-    doclens.write.mode("overwrite").parquet(os.path.join(gdir, "doclens"))
+    return {"postings": postings, "doclens": doclens}
 
 
 def build_text_index(
@@ -134,47 +94,20 @@ def build_text_index(
     id_col: str = "doc_id",
     on_before_commit: Callable[[int], None] | None = None,
 ) -> None:
-    """Create the index at ``path`` from the corpus — init meta,
-    generation 0, meta commit (the init meta makes a first-build
-    crash replayable instead of tripping the vanished-meta refusal).
-    Refuses over an existing committed index (use
-    :func:`extend_text_index` to admit more documents).
-    ``on_before_commit`` is the crash-window test seam."""
-    spark = df.sparkSession
-    meta = S.read_meta(spark, path, _META, _CTX, _EMPTY)
-    if meta["generations"]:
-        raise IOError(
-            f"text index at {path!r} already has committed generations "
-            f"{meta['generations']} — extend_text_index admits new docs"
-        )
-    # INIT meta before the first generation write — a crash between
-    # gen-0 and the commit then leaves a committed-empty meta plus an
-    # unreferenced orphan the re-run overwrites; without it the
-    # vanished-meta refusal bricks the root on a first-build crash
-    S.write_meta(spark, path, _META, {"generations": [], "seq": -1})
-    postings, doclens = _components(df, text_col, id_col)
-    gen = S.gen_name(0)
-    _write_generation(spark, path, gen, postings, doclens)
-    if on_before_commit is not None:
-        on_before_commit(0)
-    S.write_meta(spark, path, _META, {"generations": [gen], "seq": 0})
+    """Create the index at ``path`` from the corpus. Refuses over an
+    existing committed index (use :func:`extend_text_index` to admit
+    more documents)."""
+    _STORE.create(
+        df.sparkSession, path, {},
+        lambda: _components(_tokenized(df, text_col, id_col)),
+        on_before_commit=on_before_commit,
+    )
 
 
 def load_text_index(spark: SparkSession, path: str) -> dict:
     """{"postings", "doclens", "meta", "path"} over the committed
-    generation chain — one multi-path parquet read per component
-    (generations are doc-disjoint, so the union IS the index)."""
-    meta = S.read_meta(spark, path, _META, _CTX, _EMPTY)
-    if not meta["generations"]:
-        raise IOError(f"text index at {path!r} has no committed data")
-    pdirs = [os.path.join(path, g, "postings") for g in meta["generations"]]
-    ddirs = [os.path.join(path, g, "doclens") for g in meta["generations"]]
-    return {
-        "postings": spark.read.parquet(*pdirs),
-        "doclens": spark.read.parquet(*ddirs),
-        "meta": meta,
-        "path": path,
-    }
+    generation chain."""
+    return _STORE.load(spark, path)
 
 
 def extend_text_index(
@@ -185,23 +118,12 @@ def extend_text_index(
     id_col: str = "doc_id",
     on_before_commit: Callable[[int], None] | None = None,
 ) -> int:
-    """Admit a snapshot into the index: tokenize the NEW docs only,
-    write them as one delta generation, commit the meta pointer.
-    Returns the number of docs added.
-
-    O(snapshot): the existing index contributes nothing but an
-    anti-join of its doclens ids (index-sized, never corpus-text-
-    sized) to drop already-indexed docs — which also makes the extend
-    idempotent under crash-re-run and redelivery (the admitted set of
-    a replay is empty or identical, and the orphan generation a crash
-    left behind is overwritten before the meta ever names it).
-    SINGLE WRITER per index, the standard maintenance contract.
-    ``on_before_commit`` is the test seam between generation write
-    and meta commit — raising there simulates the worst-case crash
-    window."""
+    """Admit a snapshot into the index: tokenize the docs NEW to it
+    (an anti-join on the index's doclens ids — index-sized, never
+    corpus-text-sized) and commit them as one delta generation.
+    Returns the number of docs added."""
     spark = new_df.sparkSession
-    idx = load_text_index(spark, path)
-    meta = idx["meta"]
+    idx = _STORE.load(spark, path)
     fresh = new_df.join(
         idx["doclens"].select(F.col("doc_id").alias(id_col)),
         id_col,
@@ -213,21 +135,11 @@ def extend_text_index(
     # never commit doclens and postings from different evaluations of
     # the anti-join (ADVICE r13)
     base = _tokenized(fresh, text_col, id_col).localCheckpoint()
-    postings, doclens = _components_from_base(base)
     n_added = base.count()
-    if n_added == 0:
-        return 0  # full redelivery: no empty generation, no commit
-    seq = meta["seq"] + 1
-    gen = S.gen_name(seq)
-    _write_generation(spark, path, gen, postings, doclens)
-    if on_before_commit is not None:
-        on_before_commit(seq)
-    S.write_meta(
-        spark,
-        path,
-        _META,
-        {"generations": meta["generations"] + [gen], "seq": seq},
-    )
+    if n_added:
+        _STORE.append(
+            spark, idx, _components(base), on_before_commit=on_before_commit
+        )
     return n_added
 
 
@@ -241,95 +153,39 @@ def text_index_maintenance_sink(
     on_before_commit: Callable[[int], None] | None = None,
 ):
     """foreachBatch function maintaining the persisted text index as
-    documents STREAM in. Use::
+    documents STREAM in (``GenerationStore.maintenance_sink``). Use::
 
         q = (docs.writeStream
              .foreachBatch(text_index_maintenance_sink("/idx/text"))
              .option("checkpointLocation", ckpt).start())
 
-    Exactly-once WITHOUT a batch-id ledger: unlike the rollup sink
-    (whose merge is not idempotent, hence its last_batch_id gate),
-    extending this index IS idempotent — admitted ids anti-join away
-    on redelivery and an empty redelivery commits nothing — so
-    at-least-once foreachBatch delivery composes to exactly-once by
-    construction. A crash between generation write and meta commit
-    leaves an unreferenced orphan the replay overwrites. The first
-    batch creates the index (build ≡ extend on a virgin root).
-    Duplicate ids WITHIN a batch are collapsed (keep-any — a stream
-    redelivering a doc mid-batch carries identical text).
-
-    Pass ``compact_every=N`` to fold the generation chain after every
-    Nth batch's admit (the ``ann_index_maintenance_sink`` rule: a
-    long-running stream maintains its own chain, in the sink, between
-    admits — single writer preserved; a crash between admit and fold
-    just defers the fold). ``retain`` passes through to the
-    compaction's reader-staleness window.
-    """
-
-    def _fn(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch = batch_df.select(id_col, text_col).dropDuplicates([id_col])
-        meta = S.read_meta(spark, path, _META, _CTX, _EMPTY)
-        if not meta["generations"]:
-            # init meta first: a batch-0 crash between the generation
-            # write and the commit must REPLAY, not wedge the stream
-            # on the vanished-meta refusal forever
-            S.write_meta(
-                spark, path, _META, {"generations": [], "seq": -1}
-            )
-            postings, doclens = _components(batch, text_col, id_col)
-            gen = S.gen_name(0)
-            _write_generation(spark, path, gen, postings, doclens)
-            if on_before_commit is not None:
-                on_before_commit(0)
-            S.write_meta(
-                spark, path, _META, {"generations": [gen], "seq": 0}
-            )
-        else:
-            extend_text_index(
-                batch, path, text_col=text_col, id_col=id_col,
-                on_before_commit=on_before_commit,
-            )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            compact_text_index(path, spark, retain=retain)
-
-    return _fn
+    ``compact_every=N`` folds the generation chain after every Nth
+    batch; ``retain`` is that fold's reader-staleness window."""
+    return _STORE.maintenance_sink(
+        path,
+        id_col=id_col,
+        cols=[id_col, text_col],
+        create=lambda batch: build_text_index(
+            batch, path, text_col=text_col, id_col=id_col,
+            on_before_commit=on_before_commit,
+        ),
+        extend=lambda batch: extend_text_index(
+            batch, path, text_col=text_col, id_col=id_col,
+            on_before_commit=on_before_commit,
+        ),
+        compact=lambda spark: compact_text_index(path, spark, retain=retain),
+        compact_every=compact_every,
+    )
 
 
 def compact_text_index(
     path: str, spark: SparkSession, *, retain: int = 0
 ) -> int:
-    """Fold the generation chain into one generation (read the union,
-    rewrite clustered by token, point meta at the new generation,
-    prune the old chain). Returns the number of generations folded.
-    Run off the serve path on whatever cadence keeps the chain short.
-
-    READER-STALENESS WINDOW (ADVICE r13): the meta swap never blocks
-    readers, but a reader that called :func:`load_text_index` BEFORE
-    the swap holds DataFrames over the old generation directories —
-    pruning them immediately vacuums files out from under that
-    reader's in-flight queries. ``retain`` keeps the N newest old
-    generations on disk past the swap (the lakehouse VACUUM
-    retention idea): with single-process readers the default 0 is
-    safe; with concurrent readers set ``retain`` to cover the longest
-    query over a stale load, and let the NEXT compaction collect
-    them."""
-    idx = load_text_index(spark, path)
-    meta = idx["meta"]
-    if len(meta["generations"]) <= 1:
-        # no fold needed, but still collect generations a prior
-        # retain>0 compaction left behind (they are unreferenced)
-        S.prune_generations(
-            spark, path, 1 + max(0, retain),
-            protect=set(meta["generations"]),
-        )
-        return 0
-    seq = meta["seq"] + 1
-    gen = S.gen_name(seq)
-    _write_generation(spark, path, gen, idx["postings"], idx["doclens"])
-    S.write_meta(spark, path, _META, {"generations": [gen], "seq": seq})
-    S.prune_generations(spark, path, 1 + max(0, retain), protect={gen})
-    return len(meta["generations"])
+    """Fold the generation chain into one token-clustered generation
+    and prune the old chain past ``retain``. Returns the number of
+    generations folded. Run off the serve path on whatever cadence
+    keeps the chain short."""
+    return _STORE.compact(spark, _STORE.load(spark, path), retain=retain)
 
 
 def bm25_topk_indexed(

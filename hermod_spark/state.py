@@ -1,11 +1,14 @@
 """Versioned-generation persisted state: the shared commit machinery.
 
-Two persisted artifacts in this repo are MAINTAINED rather than
+The persisted artifacts in this repo that are MAINTAINED rather than
 recomputed — the streaming rollup state (``streaming/rollup.py``) and
-the inverted text index (``operators/textindex.py``) — and both need
-the same thing from the filesystem: immutable generation directories
-plus ONE atomically-replaced JSON meta file naming the committed
-state. This module is that idiom, factored once:
+the text, fingerprint and ANN indexes (``operators/textindex.py``,
+``fpindex.py``, ``similarity.py``) — all need the same thing from the
+filesystem: immutable generation directories plus ONE
+atomically-replaced JSON meta file naming the committed state. This
+module is that idiom, factored once; :class:`GenerationStore` adds
+the delta-chain lifecycle (create / load / append / compact / sink)
+the three indexes share:
 
 - ``write_meta`` replaces the meta via rename-aside + rename-in (HDFS
   has no atomic overwrite). A crash inside the two-rename window
@@ -37,11 +40,10 @@ import threading
 from collections.abc import Callable, Hashable
 from typing import Any
 
-from pyspark.sql import SparkSession
-
-from hermod_spark.operators.dedup import _hadoop_fs
+from pyspark.sql import DataFrame, SparkSession
 
 GEN_PREFIX = "gen-"
+_EMPTY_CHAIN = {"generations": [], "seq": -1}
 
 
 class IndexCache:
@@ -85,6 +87,17 @@ class IndexCache:
             return self._values[key]
 
 
+def hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path, jvm) for ``path`` via the session's Hadoop
+    conf — directory maintenance must use the SAME filesystem Spark
+    writes to (driver-local os.* silently targets the wrong FS on a
+    cluster)."""
+    jvm = spark._jvm
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return fs, fs.makeQualified(jpath), jvm
+
+
 def jpath(jvm, parent, name: str):
     return jvm.org.apache.hadoop.fs.Path(parent, name)
 
@@ -107,7 +120,7 @@ def read_meta(
     Missing meta over existing generations (or a ``.old-…`` aside)
     means a crashed meta swap — raise with the recovery path rather
     than restarting from empty state over committed data."""
-    fs, jroot, jvm = _hadoop_fs(spark, root)
+    fs, jroot, jvm = hadoop_fs(spark, root)
     meta_path = jpath(jvm, jroot, meta_name)
     if fs.exists(meta_path):
         stream = fs.open(meta_path)
@@ -153,7 +166,7 @@ def write_meta(
     name, the live meta moves aside, staging renames in, aside
     deletes. Crash between the renames is recoverable via the
     ``.old-…`` file ``read_meta`` points at."""
-    fs, jroot, jvm = _hadoop_fs(spark, root)
+    fs, jroot, jvm = hadoop_fs(spark, root)
     fs.mkdirs(jroot)
     pid = os.getpid()
     # sweep dead staging files from crashed prior writers — under the
@@ -196,7 +209,7 @@ def prune_generations(
 ) -> None:
     """Delete generation dirs beyond the ``keep`` newest (by parsed
     integer id — never lexicographic), skipping any in ``protect``."""
-    fs, jroot, jvm = _hadoop_fs(spark, root)
+    fs, jroot, jvm = hadoop_fs(spark, root)
     gens = sorted(
         (
             str(s.getPath().getName())
@@ -209,3 +222,185 @@ def prune_generations(
     for stale in gens[keep:]:
         if stale not in protect:
             fs.delete(jpath(jvm, jroot, stale), True)
+
+
+class GenerationStore:
+    """A persisted index kept as a chain of immutable delta generations
+    under one root, committed by one meta file::
+
+        <root>/<meta_name>                 # {"generations": [...], "seq": n,
+                                           #  + the family's meta keys}
+        <root>/gen-NNNNNNNNN/<component>/  # one parquet dir per component
+
+    The text, fingerprint and ANN indexes are instances. ``components``
+    maps each component name, in write order, to its clustering
+    columns: a clustered component is repartitioned on them and sorted
+    within partitions, so a serve-side predicate or equi-join on those
+    columns prunes parquet row groups.
+
+    The contract every instance relies on:
+
+    - **Id-disjoint deltas.** A family admits only ids its index lacks
+      (an anti-join on its id component), so the logical index is a
+      plain multi-path parquet read of the chain — no merge on the
+      serve path, and an extend costs O(snapshot).
+    - **Idempotent admit.** A redelivered batch admits nothing and the
+      family commits nothing (``append`` is never called with an empty
+      delta); a crash between a generation write and its meta commit
+      leaves an unreferenced orphan that the re-run overwrites. So
+      :meth:`maintenance_sink` turns at-least-once ``foreachBatch``
+      delivery into exactly-once without a batch-id ledger.
+    - **Init meta first.** :meth:`create` commits an empty chain before
+      writing gen-0, so a first-build crash replays instead of tripping
+      :func:`read_meta`'s vanished-meta refusal.
+    - **Single writer per root.** Admits and compactions run in one
+      maintenance process, one at a time (the sink compacts between
+      admits); readers are never blocked, because committed
+      generations are immutable and the meta swap is atomic.
+    - **Reader-staleness window.** A reader that loaded before a
+      compaction's meta swap holds frames over the old generations;
+      ``retain`` keeps that many of the newest old generations on disk
+      past the swap, and the next compaction collects them. The
+      default 0 is safe for single-process readers.
+
+    ``on_before_commit(seq)`` runs between a generation write and its
+    meta commit — the crash-window test seam."""
+
+    def __init__(
+        self, meta_name: str, ctx: str, components: dict[str, tuple[str, ...]]
+    ) -> None:
+        self.meta_name = meta_name
+        self.ctx = ctx
+        self.components = components
+
+    def meta(self, spark: SparkSession, root: str) -> dict:
+        """The committed meta, or the empty chain for a virgin root."""
+        return read_meta(spark, root, self.meta_name, self.ctx, _EMPTY_CHAIN)
+
+    def load(self, spark: SparkSession, root: str) -> dict:
+        """``{<component>: DataFrame, ..., "meta", "path"}`` over the
+        committed chain: one meta read, then one multi-path parquet
+        read per component."""
+        meta = self.meta(spark, root)
+        gens = meta["generations"]
+        if not gens:
+            raise IOError(f"{self.ctx} at {root!r} has no committed data")
+        index = {
+            name: spark.read.parquet(*(os.path.join(root, g, name) for g in gens))
+            for name in self.components
+        }
+        return {**index, "meta": meta, "path": root}
+
+    def create(
+        self, spark: SparkSession, root: str, identity: dict,
+        build: Callable[[], dict[str, DataFrame]], *,
+        stats: Callable[[dict[str, DataFrame], str], dict] | None = None,
+        on_before_commit: Callable[[int], None] | None = None,
+    ) -> None:
+        """Commit gen-0 at a root with no committed generations.
+        ``build()`` runs after the init meta and returns gen-0's
+        components; ``stats(components, gen_dir)`` runs after their
+        write and returns meta keys to commit with them. ``identity``
+        keys ride both metas."""
+        committed = self.meta(spark, root)["generations"]
+        if committed:
+            raise IOError(
+                f"{self.ctx} at {root!r} already has committed generations "
+                f"{committed} — extend the index to admit more"
+            )
+        init = {**identity, **_EMPTY_CHAIN}
+        write_meta(spark, root, self.meta_name, init)
+        self._advance(spark, root, init, build(), [], stats, on_before_commit)
+
+    def append(
+        self, spark: SparkSession, index: dict, delta: dict[str, DataFrame],
+        *, extra: dict | None = None,
+        on_before_commit: Callable[[int], None] | None = None,
+    ) -> None:
+        """Commit a non-empty, id-disjoint ``delta`` as the next
+        generation of the loaded ``index``, with ``extra`` meta keys."""
+        meta = index["meta"]
+        self._advance(
+            spark, index["path"], meta, delta, meta["generations"],
+            lambda *_: extra or {}, on_before_commit,
+        )
+
+    def compact(
+        self, spark: SparkSession, index: dict, *, retain: int = 0,
+        fold: dict[str, DataFrame] | None = None, extra: dict | None = None,
+        on_before_commit: Callable[[int], None] | None = None,
+    ) -> int:
+        """Fold the loaded ``index``'s chain into one generation, commit
+        it with ``extra`` meta keys, then prune all but ``retain`` old
+        generations. ``fold`` replaces components in the folded
+        generation and forces a fold even of a single generation.
+        Returns the number of generations folded (0: nothing to do)."""
+        meta, root = index["meta"], index["path"]
+        gens = meta["generations"]
+        keep = 1 + max(0, retain)
+        if len(gens) <= 1 and fold is None:
+            # no fold, but still collect generations an earlier
+            # retain>0 compaction left behind (they are unreferenced)
+            prune_generations(spark, root, keep, protect=set(gens))
+            return 0
+        folded = {name: index[name] for name in self.components}
+        folded.update(fold or {})
+        gen = self._advance(
+            spark, root, meta, folded, [], lambda *_: extra or {},
+            on_before_commit,
+        )
+        prune_generations(spark, root, keep, protect={gen})
+        return len(gens)
+
+    def maintenance_sink(
+        self, root: str, *, id_col: str,
+        create: Callable[[DataFrame], Any], extend: Callable[[DataFrame], Any],
+        compact: Callable[[SparkSession], Any], compact_every: int | None,
+        cols: list[str] | None = None,
+    ) -> Callable[[DataFrame, int], None]:
+        """foreachBatch function maintaining the index at ``root``. Each
+        micro-batch keeps ``cols`` (all when None) and collapses
+        duplicate ids keep-any. An empty batch is skipped, so a virgin
+        root stays virgin until the first row; the first non-empty
+        batch runs ``create``, later ones ``extend``. After every
+        ``compact_every``-th batch ``compact`` folds the chain; a crash
+        between admit and fold just defers the fold."""
+
+        def _fn(batch_df: DataFrame, batch_id: int) -> None:
+            spark = batch_df.sparkSession
+            batch = batch_df.select(*cols) if cols else batch_df
+            batch = batch.dropDuplicates([id_col])
+            if batch.isEmpty():
+                return
+            if self.meta(spark, root)["generations"]:
+                extend(batch)
+            else:
+                create(batch)
+            if compact_every and (batch_id + 1) % compact_every == 0:
+                compact(spark)
+
+        return _fn
+
+    def _advance(
+        self, spark, root, meta, components, kept, stats, on_before_commit
+    ) -> str:
+        """Write generation ``seq+1`` and commit the chain ``kept + [it]``
+        with the meta keys ``stats`` returns."""
+        seq = meta["seq"] + 1
+        gen = gen_name(seq)
+        gdir = os.path.join(root, gen)
+        for name, cluster in self.components.items():
+            df = components[name]
+            if cluster:
+                df = df.repartition(*cluster).sortWithinPartitions(*cluster)
+            # overwrite: a crashed earlier attempt at this seq may have
+            # left an unreferenced orphan here
+            df.write.mode("overwrite").parquet(os.path.join(gdir, name))
+        extra = stats(components, gdir) if stats is not None else {}
+        if on_before_commit is not None:
+            on_before_commit(seq)
+        write_meta(
+            spark, root, self.meta_name,
+            {**meta, **extra, "generations": kept + [gen], "seq": seq},
+        )
+        return gen

@@ -153,7 +153,8 @@ def test_stream_maintenance_sink_exactly_once(spark, tmp_path):
     REDELIVERED and a poisoned commit mid-stream — the served BM25
     equals the from-scratch direct recompute over all docs (extend's
     id-idempotency makes at-least-once delivery exactly-once without
-    a batch ledger), and intra-batch duplicate ids collapse."""
+    a batch ledger), intra-batch duplicate ids collapse, and an empty
+    micro-batch leaves a virgin root virgin (no empty gen-0)."""
     from hermod_spark.operators.textindex import (
         text_index_maintenance_sink,
     )
@@ -161,6 +162,9 @@ def test_stream_maintenance_sink_exactly_once(spark, tmp_path):
     docs = _docs(spark)
     path = str(tmp_path / "idx")
     fn = text_index_maintenance_sink(path)
+    fn(docs.limit(0), 0)  # empty micro-batch: nothing committed
+    with pytest.raises(IOError, match="no committed data"):
+        load_text_index(spark, path)
     b0 = docs.filter(F.col("doc_id") % 3 == 0)
     fn(b0.unionByName(b0.limit(5)), 0)  # intra-batch dup ids collapse
     fn(docs.filter(F.col("doc_id") % 3 == 1), 1)
