@@ -182,206 +182,15 @@ def interval_join_of(ev: DataFrame) -> DataFrame:
     )
 
 
-def _image_blobs_of(
-    docs: DataFrame, frames: int = 1, require_text: bool = False
-) -> DataFrame:
-    """documents-shaped frame → (doc_id, content) tile blobs via ONE
-    Arrow mapInPandas stage — the shared synth stage of ALL image and
-    video queries (a drift between them would silently hash different
-    tiles). Frame f is the tile of the 64-char text block at offset
-    64·f; emitted when the text reaches the offset (padding-only
-    frames can't create false sharing), except frame 0 which is always
-    emitted for the single-frame image queries unless
-    ``require_text``."""
-    import pandas as _pd
-
-    d = docs.select("doc_id", "text")
-
-    def gen(it):
-        from hermod_spark.operators.multimodal import image_tile_blob
-
-        for pdf in it:
-            ids, blobs = [], []
-            for i, t in zip(pdf["doc_id"], pdf["text"]):
-                t = t or ""
-                for f in range(frames):
-                    if len(t) > 64 * f or (f == 0 and not require_text):
-                        ids.append(i)
-                        blobs.append(image_tile_blob(t[64 * f : 64 * (f + 1)]))
-            yield _pd.DataFrame({"doc_id": ids, "content": blobs})
-
-    return d.mapInPandas(gen, "doc_id LONG, content BINARY")
-
-
-def _audio_blobs_of(docs: DataFrame) -> DataFrame:
-    """documents-shaped frame → (doc_id, content) REAL WAV blobs via
-    ONE Arrow mapInPandas stage — the audio counterpart of
-    ``_image_blobs_of``. Sample j of doc d is (code_j - 128)·256 where
-    code_j = min(codepoint of text char j, 255), space(32)-padded to
-    64 samples: 16-bit PCM round-trips bit-exactly through the stdlib
-    RIFF writer/reader, so the DuckDB oracle recomputes the
-    fingerprint straight from the text."""
-    import pandas as _pd
-
-    d = docs.select("doc_id", "text")
-
-    def gen(it):
-        from hermod_spark.operators.multimodal import wav_from_codes
-
-        for pdf in it:
-            blobs = []
-            for t in pdf["text"]:
-                t = (t or "")[:64]
-                codes = [min(ord(ch), 255) for ch in t] + [32] * (64 - len(t))
-                blobs.append(wav_from_codes(codes))
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "content": blobs})
-
-    return d.mapInPandas(gen, "doc_id LONG, content BINARY")
-
-
-def _image_hashes_of(
-    docs: DataFrame, frames: int = 1, require_text: bool = False
-) -> DataFrame:
-    """Fused tile-synth + aHash — value-identical to
-    ``image_ahash(_image_blobs_of(docs, frames, require_text))``
-    (parity pinned by test) in ONE Arrow stage instead of two: the
-    tile blobs never cross the JVM↔Python boundary, and the
-    parallelizing repartition moves (doc_id, text) rows BEFORE the
-    Python stage, so the synth loop runs on every core instead of a
-    small scan's single task (optimization guide §4.1: one boundary
-    crossing, §2.3: shuffle the lightweight rows, not the payload).
-    r14 opt round: the per-row ``image_tile_blob`` → ``_ahash_one``
-    composition is replaced by the vectorized ``ahash_text_batch``
-    numpy kernel (guide §4.2; batch==row parity pinned by test).
-    Rows are emitted per-frame-block rather than per-doc-interleaved —
-    a partition-internal ordering no consumer observes (aggregates,
-    hash joins, keyed windows only)."""
-    import pandas as _pd
-
-    d = data.ensure_min_partitions(docs.select("doc_id", "text"))
-
-    def gen(it):
-        from hermod_spark.operators.multimodal import ahash_text_batch
-
-        for pdf in it:
-            texts = [t or "" for t in pdf["text"]]
-            parts = []
-            for f in range(frames):
-                if f == 0 and not require_text:
-                    sub_ids, sub_txt = pdf["doc_id"], texts
-                else:
-                    keep = [j for j, t in enumerate(texts) if len(t) > 64 * f]
-                    sub_ids = pdf["doc_id"].iloc[keep]
-                    sub_txt = [texts[j] for j in keep]
-                hashes = ahash_text_batch(sub_txt, 64 * f)
-                parts.append(
-                    _pd.DataFrame(
-                        {
-                            "doc_id": sub_ids.to_numpy(),
-                            "ahash": hashes,
-                            # synthetic tiles are always well-formed;
-                            # the batch kernel never yields None (the
-                            # per-row parity test pins this)
-                            "decode_ok": True,
-                        }
-                    )
-                )
-            yield _pd.concat(parts) if len(parts) > 1 else parts[0]
-
-    return d.mapInPandas(gen, "doc_id LONG, ahash STRING, decode_ok BOOLEAN")
-
-
-def _audio_fps_of(docs: DataFrame) -> DataFrame:
-    """Fused WAV-synth + energy-sign fingerprint — value-identical to
-    ``audio_fingerprint(_audio_blobs_of(docs))`` (parity pinned by
-    test). r14 opt round: the per-row ``wav_from_codes`` →
-    ``_audio_fp_one`` RIFF round-trip is replaced by the vectorized
-    ``audio_fp_text_batch`` numpy kernel (guide §4.2) — identical by
-    construction because 16-bit PCM round-trips the (code-128)·256
-    samples bit-exactly, so skipping the container changes no energy,
-    mean, or sign decision (batch==row parity pinned by test)."""
-    import pandas as _pd
-
-    d = data.ensure_min_partitions(docs.select("doc_id", "text"))
-
-    def gen(it):
-        from hermod_spark.operators.multimodal import audio_fp_text_batch
-
-        for pdf in it:
-            fps = audio_fp_text_batch([t or "" for t in pdf["text"]])
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "afp": fps,
-                    # synth WAVs are always mono/16-bit/64-sample; the
-                    # batch kernel never yields None (parity-pinned)
-                    "decode_ok": True,
-                }
-            )
-
-    return d.mapInPandas(gen, "doc_id LONG, afp STRING, decode_ok BOOLEAN")
-
-
-def _mm_hashes_of(docs: DataFrame) -> DataFrame:
-    """ONE fused Arrow pass over the documents for the multimodal
-    report — per document the frame-f tile aHashes (f < 3; frame f
-    emitted when the text reaches offset 64·f, frame 0 always) plus
-    the audio energy-sign fingerprint carried on the frame-0 row.
-    Value-contract (pinned by test): the frame-0 rows equal
-    ``_image_hashes_of(docs)`` ∪ ``_audio_fps_of(docs)``, the
-    has_text rows equal ``_image_hashes_of(docs, frames=3,
-    require_text=True)`` — the same kernels, so `mm_dedup_report`'s
-    three modality legs share one corpus scan and one Python stage
-    instead of three of each (guide §1.2: don't compute the frame-0
-    tile hash twice; §4.1: one boundary crossing)."""
-    import pandas as _pd
-
-    d = data.ensure_min_partitions(docs.select("doc_id", "text"))
-
-    def gen(it):
-        from hermod_spark.operators.multimodal import (
-            ahash_text_batch,
-            audio_fp_text_batch,
-        )
-
-        for pdf in it:
-            texts = [t or "" for t in pdf["text"]]
-            parts = []
-            for f in range(3):
-                if f == 0:
-                    sub_ids, sub_txt = pdf["doc_id"], texts
-                    afp = audio_fp_text_batch(sub_txt)
-                else:
-                    keep = [j for j, t in enumerate(texts) if len(t) > 64 * f]
-                    sub_ids = pdf["doc_id"].iloc[keep]
-                    sub_txt = [texts[j] for j in keep]
-                    afp = None
-                parts.append(
-                    _pd.DataFrame(
-                        {
-                            "doc_id": sub_ids.to_numpy(),
-                            "frame": f,
-                            "ahash": ahash_text_batch(sub_txt, 64 * f),
-                            "afp": afp,
-                            "has_text": [len(t) > 64 * f for t in sub_txt],
-                        }
-                    )
-                )
-            yield _pd.concat(parts)
-
-    return d.mapInPandas(
-        gen,
-        "doc_id LONG, frame INT, ahash STRING, afp STRING, has_text BOOLEAN",
-    )
-
-
 def audio_fpdedup_of(docs: DataFrame) -> DataFrame:
     """WAV synth + Arrow energy-sign fingerprint (one fused stage) →
     hash-window dedup over a documents-shaped frame — the ONE body
     behind the `mm_audio_fpdedup` entry query and bench's 10× probe."""
     from hermod_spark.operators.multimodal import ahash_dedup
 
-    return ahash_dedup(_audio_fps_of(docs), hash_col="afp").orderBy("doc_id")
+    return ahash_dedup(
+        MM.synth_media_hashes(docs, image=False, audio=True), hash_col="afp"
+    ).orderBy("doc_id")
 
 
 def audio_neardup_of(docs: DataFrame, max_hamming: int = 4) -> DataFrame:
@@ -393,7 +202,9 @@ def audio_neardup_of(docs: DataFrame, max_hamming: int = 4) -> DataFrame:
     from hermod_spark.operators.multimodal import ahash_neardup
 
     return ahash_neardup(
-        _audio_fps_of(docs), max_hamming, hash_col="afp"
+        MM.synth_media_hashes(docs, image=False, audio=True),
+        max_hamming,
+        hash_col="afp",
     ).orderBy("doc_a", "doc_b")
 
 
@@ -509,11 +320,11 @@ def ensure_fp_index(docs: DataFrame, key: str) -> dict:
         path = _scratch_dir("fp-idx")
         corpus = docs.filter(F.col("doc_id") % 10 != 7)
         FPI.save_fp_index(
-            _image_hashes_of(corpus.filter(F.col("doc_id") % 3 != 1)),
+            MM.synth_media_hashes(corpus.filter(F.col("doc_id") % 3 != 1)),
             path, hash_bits=64, max_hamming=4,
         )
         FPI.extend_fp_index(
-            _image_hashes_of(corpus.filter(F.col("doc_id") % 3 == 1)), path
+            MM.synth_media_hashes(corpus.filter(F.col("doc_id") % 3 == 1)), path
         )
         return path
 
@@ -532,7 +343,7 @@ def mm_neardup_incremental_of(docs: DataFrame, key: str) -> DataFrame:
     from hermod_spark.operators.fpindex import neardup_pairs_incremental
 
     idx = ensure_fp_index(docs, key)
-    snap = _image_hashes_of(docs.filter(F.col("doc_id") % 10 == 7))
+    snap = MM.synth_media_hashes(docs.filter(F.col("doc_id") % 10 == 7))
     return neardup_pairs_incremental(snap, idx).orderBy("doc_a", "doc_b")
 
 
@@ -681,7 +492,7 @@ def image_ahash_dedup_of(docs: DataFrame) -> DataFrame:
     `mm_image_ahash_dedup` entry query and bench's 10× probe."""
     from hermod_spark.operators.multimodal import ahash_dedup
 
-    return ahash_dedup(_image_hashes_of(docs)).orderBy("doc_id")
+    return ahash_dedup(MM.synth_media_hashes(docs)).orderBy("doc_id")
 
 
 def image_neardup_of(docs: DataFrame, max_hamming: int = 4) -> DataFrame:
@@ -690,7 +501,7 @@ def image_neardup_of(docs: DataFrame, max_hamming: int = 4) -> DataFrame:
     `mm_image_neardup` entry query and bench's 10× probe."""
     from hermod_spark.operators.multimodal import ahash_neardup
 
-    return ahash_neardup(_image_hashes_of(docs), max_hamming).orderBy(
+    return ahash_neardup(MM.synth_media_hashes(docs), max_hamming).orderBy(
         "doc_a", "doc_b"
     )
 
@@ -706,9 +517,8 @@ def image_dedup_funnel_of(docs: DataFrame) -> DataFrame:
     hashes are distinct by construction)."""
     from hermod_spark.operators.multimodal import ahash_neardup
 
-    hashed = _image_hashes_of(docs)
     reps = (
-        hashed.filter(F.col("decode_ok"))
+        MM.synth_media_hashes(docs)
         .groupBy("ahash")
         .agg(F.min("doc_id").alias("doc_id"))
     )
@@ -723,11 +533,11 @@ def video_framedup_of(docs: DataFrame, min_shared: int = 2) -> DataFrame:
     false sharing) — hashed per frame, then videos sharing ≥
     ``min_shared`` distinct frame hashes pair up. Shared by the
     `mm_video_framedup` entry query and bench's 10× probe; the frame
-    synth+hash is the SAME fused ``_image_hashes_of`` stage the image
+    synth+hash is the SAME ``synth_media_hashes`` kernel the image
     queries use (frames=3, text-gated)."""
     from hermod_spark.operators.multimodal import frame_dedup_pairs
 
-    frames = _image_hashes_of(docs, frames=3, require_text=True)
+    frames = MM.synth_media_hashes(docs, frames=3, require_text=True)
     return frame_dedup_pairs(frames, min_shared).orderBy(
         "video_a", "video_b"
     )
@@ -828,6 +638,41 @@ def _fingerprint_sql(col: str) -> str:
         f"string_split_regex(regexp_replace(lower({col}),"
         f" '^\\s+|\\s+$', '', 'g'), '\\s+'))), ' '))"
     )
+
+
+def _tile_codes_sql(col: str) -> str:
+    """DuckDB mirror of multimodal._tile_codes_batch: the 64 tile codes
+    of ``col``'s first 64 chars — codepoint clamped at 255, space(32)
+    padded past the text end."""
+    return (
+        f"list_transform(range(1, 65), i -> CASE WHEN i <= length({col})"
+        f" THEN LEAST(unicode(substr({col}, i, 1)), 255) ELSE 32 END)"
+    )
+
+
+def _ahash_sql(codes: str) -> str:
+    """DuckDB mirror of multimodal.ahash_text_batch over a codes list:
+    bit i = code_i >= mean code. The mean is sum/64, an exact double,
+    so every >= decision matches the numpy kernel."""
+    return (
+        f"array_to_string(list_transform({codes}, v ->"
+        f" CASE WHEN v >= list_aggregate({codes}, 'avg') THEN '1' ELSE '0'"
+        f" END), '')"
+    )
+
+
+def _audio_fp_sql(codes: str) -> str:
+    """DuckDB mirror of multimodal.audio_fp_text_batch over a codes
+    list: sample j = (code_j - 128)·256 (bit-exact through the 16-bit
+    PCM round trip), energy = sample² (< 2^30, exact double), bit =
+    energy >= mean energy (sum < 2^36 over a power-of-two count, exact)
+    — the aHash arithmetic applied to the energies, bound once through
+    a one-element list so the mean is not re-derived per element."""
+    energies = (
+        f"list_transform({codes}, c ->"
+        f" CAST((c - 128) * 256 AS DOUBLE) * ((c - 128) * 256))"
+    )
+    return f"list_transform([{energies}], en -> {_ahash_sql('en')})[1]"
 
 
 def _shingles_sql(col: str, w: int = 3) -> str:
@@ -2697,7 +2542,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         clean = uniq.filter(F.col("doc_id") % 10 != 7).join(
             flagged, "doc_id", "left_anti"
         ).localCheckpoint()
-        pairs = MM.ahash_neardup(_image_hashes_of(clean), max_hamming=4)
+        pairs = MM.ahash_neardup(MM.synth_media_hashes(clean), max_hamming=4)
         final = clean.join(
             pairs.select(F.col("doc_b").alias("doc_id")).distinct(),
             "doc_id",
@@ -3001,15 +2846,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         fn = FPI.fp_index_maintenance_sink(path)
         corpus = d.filter(F.col("doc_id") % 10 != 7)
         for i in range(3):
-            fn(_image_hashes_of(
+            fn(MM.synth_media_hashes(
                 corpus.filter(F.col("doc_id") % 3 == i)
             ), i)
             if i == 1:
-                fn(_image_hashes_of(
+                fn(MM.synth_media_hashes(
                     corpus.filter(F.col("doc_id") % 3 == 1)
                 ), 1)  # redelivery
         idx = FPI.load_fp_index(spark, path)
-        snap = _image_hashes_of(d.filter(F.col("doc_id") % 10 == 7))
+        snap = MM.synth_media_hashes(d.filter(F.col("doc_id") % 10 == 7))
         return FPI.neardup_pairs_incremental(snap, idx).orderBy(
             "doc_a", "doc_b"
         )
@@ -3040,8 +2885,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             return FPI.load_fp_index(spark, path)
 
         return FPI.dedup_report_indexed({
-            "image": fp_index("image", _image_hashes_of, "ahash"),
-            "audio": fp_index("audio", _audio_fps_of, "afp"),
+            "image": fp_index("image", MM.synth_media_hashes, "ahash"),
+            "audio": fp_index(
+                "audio",
+                lambda d: MM.synth_media_hashes(d, image=False, audio=True),
+                "afp",
+            ),
         }).orderBy("metric")
 
     q["mm_dedup_report_indexed"] = mm_dedup_report_indexed
@@ -3081,12 +2930,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         shared-frame pair count and n_docs. One (metric, value) frame
         — what a curation run reads before choosing thresholds.
 
-        All three modality legs read ONE fused hash pass
-        (`_mm_hashes_of`, checkpointed once): the corpus text is
-        scanned and Python-hashed exactly once for the whole report
-        instead of once per leg (r14 optimization; the frame-0 tile
-        hash used to be computed twice, by the image and video
-        legs). The three SCALAR metrics (n_docs and both
+        All three modality legs read ONE hash pass
+        (`synth_media_hashes` with frames=3 and audio, checkpointed
+        once): the corpus text is scanned and Python-hashed exactly
+        once for the whole report instead of once per leg (r14
+        optimization; the frame-0 tile hash used to be computed
+        twice, by the image and video legs). The three SCALAR metrics (n_docs and both
         exact-removable counts) collapse into ONE multi-aggregate
         pass over the frame-0 rows (r15, guide §2.1: every frame-0
         row exists for every doc, so count(1) ≡ n_docs and
@@ -3102,7 +2951,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
         docs = _t(spark, sf, "documents")
-        mm = _mm_hashes_of(docs).localCheckpoint()
+        mm = MM.synth_media_hashes(
+            docs, frames=3, audio=True
+        ).localCheckpoint()
         f0 = mm.filter(F.col("frame") == 0)
         parts = [
             f0.agg(
@@ -3135,10 +2986,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 )
             )
         vid = frame_dedup_pairs(
-            mm.filter(F.col("has_text")).select(
-                "doc_id", "ahash",
-                F.col("ahash").isNotNull().alias("decode_ok"),
-            ),
+            mm.filter(F.col("has_text")).select("doc_id", "ahash"),
             min_shared=2,
         )
         parts.append(
@@ -5609,20 +5457,9 @@ FROM c2"""
     )
     o["cur_pipeline_v3"] = (
         _v3_prefix
-        + """mpx AS (
-  SELECT doc_id,
-    list_transform(range(1, 65), i ->
-      CASE WHEN i <= length(text)
-           THEN LEAST(unicode(substr(text, i, 1)), 255)
-           ELSE 32 END) AS codes
-  FROM clean
-), mmh AS (
-  SELECT doc_id,
-    array_to_string(list_transform(codes, c ->
-      CASE WHEN c >= list_aggregate(codes, 'avg') THEN '1' ELSE '0' END),
-      '') AS ahash
-  FROM mpx
-), mdrop AS (
+        + f"""mpx AS (SELECT doc_id, {_tile_codes_sql("text")} AS codes FROM clean),
+mmh AS (SELECT doc_id, {_ahash_sql("codes")} AS ahash FROM mpx),
+mdrop AS (
   SELECT DISTINCT b.doc_id
   FROM mmh a JOIN mmh b ON a.doc_id < b.doc_id
   WHERE bit_count(xor(a.ahash::BIT, b.ahash::BIT)) <= 4
@@ -6308,24 +6145,17 @@ SELECT doc_id, CAST(8000 AS INTEGER) AS sample_rate,
   TRUE AS decode_ok
 FROM documents"""
 
-    # identical tile + hash arithmetic as image_tile_blob/_ahash_one:
-    # pixel i = min(codepoint, 255) of text char i (space=32 padding),
-    # mean = sum/64 (exact double), bit = pixel >= mean
-    o["mm_image_ahash_dedup"] = """
-WITH px AS (
-  SELECT doc_id,
-    list_transform(range(1, 65), i ->
-      CASE WHEN i <= length(text)
-           THEN LEAST(unicode(substr(text, i, 1)), 255)
-           ELSE 32 END) AS codes
-  FROM documents
-), h AS (
-  SELECT doc_id,
-    array_to_string(list_transform(codes, c ->
-      CASE WHEN c >= list_aggregate(codes, 'avg') THEN '1' ELSE '0' END),
-      '') AS ahash
-  FROM px
-)
+    # the synth_media_hashes arithmetic over the documents text (tile
+    # codes, then the aHash and energy-sign fingerprint of the codes;
+    # see the _tile_codes_sql/_ahash_sql/_audio_fp_sql mirrors)
+    _PX = (
+        f"px AS (SELECT doc_id, {_tile_codes_sql('text')} AS codes"
+        " FROM documents)"
+    )
+    _AHASH = f"SELECT doc_id, {_ahash_sql('codes')} AS ahash FROM px"
+    _AFP = f"SELECT doc_id, {_audio_fp_sql('codes')} AS afp FROM px"
+    _AHASH_CTE = f"\nWITH {_PX}, h AS ({_AHASH})"
+    o["mm_image_ahash_dedup"] = _AHASH_CTE + """
 SELECT doc_id, ahash,
   COUNT(*) OVER (PARTITION BY ahash) AS group_size,
   doc_id = MIN(doc_id) OVER (PARTITION BY ahash) AS keep
@@ -6334,21 +6164,7 @@ FROM h ORDER BY doc_id"""
     # the oracle is the honest O(n^2) hamming join over the same hash
     # CTE — matching the banded op's output exactly proves the
     # pigeonhole filter is complete for the <= 4 ball
-    o["mm_image_neardup"] = """
-WITH px AS (
-  SELECT doc_id,
-    list_transform(range(1, 65), i ->
-      CASE WHEN i <= length(text)
-           THEN LEAST(unicode(substr(text, i, 1)), 255)
-           ELSE 32 END) AS codes
-  FROM documents
-), h AS (
-  SELECT doc_id,
-    array_to_string(list_transform(codes, c ->
-      CASE WHEN c >= list_aggregate(codes, 'avg') THEN '1' ELSE '0' END),
-      '') AS ahash
-  FROM px
-)
+    o["mm_image_neardup"] = _AHASH_CTE + """
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
   CAST(bit_count(xor(a.ahash::BIT, b.ahash::BIT)) AS BIGINT) AS hamming
 FROM h a JOIN h b ON a.doc_id < b.doc_id
@@ -6359,21 +6175,7 @@ ORDER BY doc_a, doc_b"""
     # the snapshot (pigeonhole banding is COMPLETE for the <= 4 ball,
     # so unlike the sign-LSH family this equality is exact, not
     # recall-bounded)
-    o["mm_neardup_incremental"] = """
-WITH px AS (
-  SELECT doc_id,
-    list_transform(range(1, 65), i ->
-      CASE WHEN i <= length(text)
-           THEN LEAST(unicode(substr(text, i, 1)), 255)
-           ELSE 32 END) AS codes
-  FROM documents
-), h AS (
-  SELECT doc_id,
-    array_to_string(list_transform(codes, c ->
-      CASE WHEN c >= list_aggregate(codes, 'avg') THEN '1' ELSE '0' END),
-      '') AS ahash
-  FROM px
-)
+    o["mm_neardup_incremental"] = _AHASH_CTE + """
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
   CAST(bit_count(xor(a.ahash::BIT, b.ahash::BIT)) AS BIGINT) AS hamming
 FROM h a JOIN h b ON a.doc_id < b.doc_id
@@ -6387,32 +6189,8 @@ ORDER BY doc_a, doc_b"""
     # index-served report: recompute the same metrics from the text;
     # near_pairs counts DISTINCT-hash pairs (≡ the funnel's rep-level
     # pair count — each distinct-hash pair is one representative pair)
-    o["mm_dedup_report_indexed"] = """
-WITH px AS (
-  SELECT doc_id,
-    list_transform(range(1, 65), i ->
-      CASE WHEN i <= length(text)
-           THEN LEAST(unicode(substr(text, i, 1)), 255)
-           ELSE 32 END) AS codes
-  FROM documents
-), hi AS (
-  SELECT doc_id,
-    array_to_string(list_transform(codes, c ->
-      CASE WHEN c >= list_aggregate(codes, 'avg') THEN '1' ELSE '0' END),
-      '') AS ahash
-  FROM px
-), ea AS (
-  SELECT doc_id,
-    list_transform(codes, c ->
-      CAST((c - 128) * 256 AS DOUBLE) * ((c - 128) * 256)) AS en
-  FROM px
-), ha AS (
-  SELECT doc_id,
-    array_to_string(list_transform(en, v ->
-      CASE WHEN v >= list_aggregate(en, 'avg') THEN '1' ELSE '0' END),
-      '') AS afp
-  FROM ea
-)
+    o["mm_dedup_report_indexed"] = f"""
+WITH {_PX}, hi AS ({_AHASH}), ha AS ({_AFP})
 SELECT metric, value FROM (
   SELECT 'image_n_items' AS metric, CAST(COUNT(*) AS BIGINT) AS value
   FROM hi
@@ -6441,21 +6219,7 @@ SELECT metric, value FROM (
     # funnel: exact-dup groups collapse to the min-id representative
     # (one row per distinct hash), then the quadratic hamming check
     # runs over representatives only — every pair has hamming >= 1
-    o["mm_image_dedup_funnel"] = """
-WITH px AS (
-  SELECT doc_id,
-    list_transform(range(1, 65), i ->
-      CASE WHEN i <= length(text)
-           THEN LEAST(unicode(substr(text, i, 1)), 255)
-           ELSE 32 END) AS codes
-  FROM documents
-), h AS (
-  SELECT doc_id,
-    array_to_string(list_transform(codes, c ->
-      CASE WHEN c >= list_aggregate(codes, 'avg') THEN '1' ELSE '0' END),
-      '') AS ahash
-  FROM px
-), reps AS (
+    o["mm_image_dedup_funnel"] = _AHASH_CTE + """, reps AS (
   SELECT MIN(doc_id) AS doc_id, ahash FROM h GROUP BY ahash
 )
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -6464,30 +6228,8 @@ FROM reps a JOIN reps b ON a.doc_id < b.doc_id
 WHERE bit_count(xor(a.ahash::BIT, b.ahash::BIT)) <= 4
 ORDER BY doc_a, doc_b"""
 
-    # audio fingerprint arithmetic, straight from the text: sample j =
-    # (code_j - 128)·256 (bit-exact through the 16-bit PCM round
-    # trip), energy = sample² (< 2^30, exact double), mean = sum/64
-    # (exact: power-of-two divisor, sum < 2^36), bit = energy >= mean
-    _AFP_CTE = """
-WITH px AS (
-  SELECT doc_id,
-    list_transform(range(1, 65), i ->
-      CASE WHEN i <= length(text)
-           THEN LEAST(unicode(substr(text, i, 1)), 255)
-           ELSE 32 END) AS codes
-  FROM documents
-), en AS (
-  SELECT doc_id,
-    list_transform(codes, c ->
-      CAST((c - 128) * 256 AS DOUBLE) * ((c - 128) * 256)) AS en
-  FROM px
-), h AS (
-  SELECT doc_id,
-    array_to_string(list_transform(en, v ->
-      CASE WHEN v >= list_aggregate(en, 'avg') THEN '1' ELSE '0' END),
-      '') AS afp
-  FROM en
-)"""
+    # audio fingerprint arithmetic, straight from the text
+    _AFP_CTE = f"\nWITH {_PX}, h AS ({_AFP})"
     o["mm_audio_fpdedup"] = _AFP_CTE + """
 SELECT doc_id, afp,
   COUNT(*) OVER (PARTITION BY afp) AS group_size,
@@ -6505,49 +6247,14 @@ ORDER BY doc_a, doc_b"""
     # hash arithmetic above; near-pair counts run over the min-id
     # representatives (the funnel's second stage), video over the
     # per-frame distinct hashes
-    o["mm_dedup_report"] = """
-WITH px AS (
-  SELECT doc_id,
-    list_transform(range(1, 65), i ->
-      CASE WHEN i <= length(text)
-           THEN LEAST(unicode(substr(text, i, 1)), 255)
-           ELSE 32 END) AS codes
-  FROM documents
-), hi AS (
-  SELECT doc_id,
-    array_to_string(list_transform(codes, c ->
-      CASE WHEN c >= list_aggregate(codes, 'avg') THEN '1' ELSE '0' END),
-      '') AS ahash
-  FROM px
-), ea AS (
-  SELECT doc_id,
-    list_transform(codes, c ->
-      CAST((c - 128) * 256 AS DOUBLE) * ((c - 128) * 256)) AS en
-  FROM px
-), ha AS (
-  SELECT doc_id,
-    array_to_string(list_transform(en, v ->
-      CASE WHEN v >= list_aggregate(en, 'avg') THEN '1' ELSE '0' END),
-      '') AS afp
-  FROM ea
-), fr AS (
+    o["mm_dedup_report"] = f"""
+WITH {_PX}, hi AS ({_AHASH}), ha AS ({_AFP}), fr AS (
   SELECT doc_id, substr(text, fi * 64 + 1, 64) AS blk
   FROM documents, (SELECT unnest([0, 1, 2]) AS fi)
   WHERE length(text) > fi * 64
-), pxv AS (
-  SELECT doc_id,
-    list_transform(range(1, 65), i ->
-      CASE WHEN i <= length(blk)
-           THEN LEAST(unicode(substr(blk, i, 1)), 255)
-           ELSE 32 END) AS codes
-  FROM fr
-), hv AS (
-  SELECT DISTINCT doc_id,
-    array_to_string(list_transform(codes, c ->
-      CASE WHEN c >= list_aggregate(codes, 'avg') THEN '1' ELSE '0' END),
-      '') AS ahash
-  FROM pxv
-), ri AS (SELECT MIN(doc_id) AS doc_id, ahash FROM hi GROUP BY ahash),
+), pxv AS (SELECT doc_id, {_tile_codes_sql("blk")} AS codes FROM fr),
+hv AS (SELECT DISTINCT doc_id, {_ahash_sql("codes")} AS ahash FROM pxv),
+ri AS (SELECT MIN(doc_id) AS doc_id, ahash FROM hi GROUP BY ahash),
 ra AS (SELECT MIN(doc_id) AS doc_id, afp FROM ha GROUP BY afp)
 SELECT metric, value FROM (
 SELECT 'n_docs' AS metric, CAST(COUNT(*) AS BIGINT) AS value FROM documents
@@ -6613,25 +6320,13 @@ FROM kept GROUP BY sa, sb ORDER BY sa, sb"""
     # (frame exists only when the text reaches the offset), hashed
     # with the identical aHash arithmetic; videos pair on >= 2 shared
     # DISTINCT frame hashes
-    o["mm_video_framedup"] = """
+    o["mm_video_framedup"] = f"""
 WITH fr AS (
   SELECT doc_id, substr(text, fi * 64 + 1, 64) AS blk
   FROM documents, (SELECT unnest([0, 1, 2]) AS fi)
   WHERE length(text) > fi * 64
-), px AS (
-  SELECT doc_id,
-    list_transform(range(1, 65), i ->
-      CASE WHEN i <= length(blk)
-           THEN LEAST(unicode(substr(blk, i, 1)), 255)
-           ELSE 32 END) AS codes
-  FROM fr
-), h AS (
-  SELECT DISTINCT doc_id,
-    array_to_string(list_transform(codes, c ->
-      CASE WHEN c >= list_aggregate(codes, 'avg') THEN '1' ELSE '0' END),
-      '') AS ahash
-  FROM px
-)
+), px AS (SELECT doc_id, {_tile_codes_sql("blk")} AS codes FROM fr),
+h AS (SELECT DISTINCT doc_id, {_ahash_sql("codes")} AS ahash FROM px)
 SELECT a.doc_id AS video_a, b.doc_id AS video_b,
   COUNT(*) AS shared_frames
 FROM h a JOIN h b ON a.ahash = b.ahash AND a.doc_id < b.doc_id

@@ -363,76 +363,6 @@ def near_dup_pairs(
 # ------------------------------------------------------------------- SimHash
 
 
-def min_label_propagation(
-    pairs: DataFrame, max_iterations: int = 20
-) -> tuple[DataFrame, int]:
-    """Connected components by iterative min-label propagation over an
-    undirected edge list ``(id_a, id_b)``.
-
-    Returns ``(labels, rounds)`` — labels is (node, label) for every
-    edge-connected node; rounds is how many propagation rounds ran
-    (the convergence-detection round included). Each round is ONE
-    shuffle join on the node id; labels converge in O(cluster
-    diameter) rounds (near-dup chains are shallow), and the loop stops
-    the first round nothing changes. Edges are localCheckpointed once
-    so loop actions never re-run the upstream (LSH) pipeline; labels
-    are checkpointed per round to truncate lineage. No driver-side
-    graph — the only per-round action is a limit(1) existence probe on
-    the checkpointed label table."""
-    edges = (
-        pairs.union(
-            pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
-        )
-        .withColumnsRenamed({"id_a": "src", "id_b": "dst"})
-        .localCheckpoint(eager=True)
-    )
-    # Iterate only over nodes that have at least one edge — isolated
-    # documents (the overwhelming majority of a deduped corpus) are
-    # their own cluster by definition and would only widen every join.
-    labels = edges.select(F.col("src").alias("node")).distinct().withColumn(
-        "label", F.col("node")
-    )
-    rounds = 0
-    changed = 0
-    for _ in range(max_iterations):
-        rounds += 1
-        nb_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("label").alias("nb_label"))
-        )
-        new_lab = F.least(F.col("label"), F.coalesce("nb_label", F.col("label")))
-        new_labels = (
-            labels.join(nb_min, labels.node == nb_min.src, "left")
-            .select(
-                "node",
-                new_lab.alias("label"),
-                # carry the convergence flag INSIDE the update so the
-                # change probe is a filter on the checkpointed frame,
-                # not a second node-id shuffle join per round
-                (new_lab != F.col("label")).alias("_chg"),
-            )
-        )
-        new_labels = new_labels.localCheckpoint(eager=True)  # truncate lineage
-        changed = new_labels.filter(F.col("_chg")).limit(1).count()
-        labels = new_labels.drop("_chg")
-        if changed == 0:
-            break
-    else:
-        if changed:
-            # exhausted max_iterations with updates still flowing: the
-            # labels are a TRUNCATED propagation (one logical cluster
-            # reported as several, silently) — refuse rather than hand
-            # keep-best dedup a wrong cluster map. Near-dup chains are
-            # shallow; hitting this means a pathological diameter.
-            raise ValueError(
-                f"min_label_propagation: not converged after "
-                f"{max_iterations} rounds (component diameter exceeds "
-                f"the cap) — raise max_iterations"
-            )
-    return labels, rounds
-
-
 def star_contraction_components(
     pairs: DataFrame, max_rounds: int = 30
 ) -> tuple[DataFrame, int]:
@@ -441,25 +371,23 @@ def star_contraction_components(
     and Beyond", SoCC'14) over an undirected edge list ``(id_a,
     id_b)``. Returns ``(labels, rounds)`` — labels is (node, label =
     min node id in the component) for every node appearing in
-    ``pairs``, bit-identical to :func:`min_label_propagation`'s
-    converged output.
+    ``pairs``, bit-identical to :func:`_driver_union_find`'s labels.
 
-    Why this exists (VERDICT r11 #1): min-label propagation needs
-    O(component diameter) rounds — a chain-shaped near-dup component
-    (crawl snapshots of one evolving page) of depth d needs d rounds,
-    and past the cap the loop must refuse. Star contraction converges
-    in O(log d) rounds: each large-star hangs every
-    larger-than-local-min neighbor directly off the local minimum,
-    halving chain depth per alternation, so a 10k-hop path closes in
-    ~15 rounds where min-label would need 10k.
+    Why star contraction (VERDICT r11 #1): min-label propagation
+    needs O(component diameter) rounds — a chain-shaped near-dup
+    component (crawl snapshots of one evolving page) of depth d needs
+    d rounds. Star contraction converges in O(log d) rounds: each
+    large-star hangs every larger-than-local-min neighbor directly
+    off the local minimum, halving chain depth per alternation, so a
+    10k-hop path closes in ~15 rounds where min-label would need 10k.
 
-    Per half-round cost matches one min-label round — ONE groupBy(u)
-    min over the symmetrized edge list + ONE join back to re-emit
-    edges + a distinct to keep the edge multiset bounded; no driver
-    graph, no collect. Each half-round is eagerly checkpointed (the
-    emitted edge set is node-bounded after the first contraction) and
-    the convergence probe is a limit(1) count on the checkpointed
-    frame — bounded regardless of graph size.
+    Per half-round cost: ONE groupBy(u) min over the symmetrized edge
+    list + ONE join back to re-emit edges + a distinct to keep the
+    edge multiset bounded; no driver graph, no collect. Each
+    half-round is eagerly checkpointed (the emitted edge set is
+    node-bounded after the first contraction) and the convergence
+    probe is a limit(1) count on the checkpointed frame — bounded
+    regardless of graph size.
 
     large_star(u): emit (v, m) for every neighbor v > u, where
       m = min(Γ(u) ∪ {u}) — larger neighbors re-hang off the local min.
@@ -484,7 +412,7 @@ def star_contraction_components(
     )
     # Node universe fixed up front from the ORIGINAL pairs (self-loop
     # -only nodes drop out of the contraction but must still label
-    # themselves, matching min_label_propagation's node coverage).
+    # themselves, matching the driver union-find's node coverage).
     nodes = (
         pairs.select(F.col("id_a").alias("node"))
         .union(pairs.select(F.col("id_b").alias("node")))
@@ -584,7 +512,7 @@ def star_contraction_components(
 
 def _driver_union_find(edges: list[tuple[int, int]]) -> list[tuple[int, int]]:
     """(node, min-reachable-node) labels via union-find — bit-identical
-    to converged min-label propagation (the component label IS the
+    to :func:`star_contraction_components` (the component label IS the
     minimum node id either way)."""
     parent: dict[int, int] = {}
 
@@ -608,7 +536,7 @@ def _driver_union_find(edges: list[tuple[int, int]]) -> list[tuple[int, int]]:
 
 
 # Above this many verified edges the CC runs as the distributed
-# min-label loop; below it, a driver-side union-find (microseconds)
+# star-contraction loop; below it, a driver-side union-find (microseconds)
 # replaces ~1.5 s of per-round shuffle/checkpoint/probe overhead.
 # Edges are VERIFIED near-dup pairs — orders of magnitude fewer than
 # docs. 200k (VERDICT r10 #5, down from 2M): 200k Row objects ≈ tens
@@ -636,7 +564,7 @@ def connected_components(
     (2^20-hop diameters do not occur in verified near-dup graphs)."""
     # lazy local checkpoint: the count() decides the execution path and
     # materializes the (possibly LSH-verify-shaped) edge pipeline ONCE;
-    # the collect / min-label loop then reads the checkpoint instead of
+    # the collect / contraction loop then reads the checkpoint instead of
     # re-running it
     pairs = pairs.localCheckpoint(eager=False)
     n = pairs.count()
@@ -692,13 +620,9 @@ def near_dup_clusters(
     edges (its cluster id; isolated docs label themselves). The keep-
     one-per-cluster dedup is then ``filter(doc_id == cluster_id)``.
 
-    Iterative min-label propagation: each round joins labels across
-    edges and takes the elementwise min — O(cluster diameter) rounds,
-    each ONE shuffle join on the node id. Near-dup clusters are
-    shallow (dup chains are short), so convergence is fast; the loop
-    stops early when a round changes nothing. This is the standard
-    large-graph CC shape (no driver-side graph, no recursion depth
-    bound by data size).
+    Labels come from :func:`connected_components` — a driver
+    union-find for bounded edge sets, distributed star contraction
+    (O(log diameter) rounds, no driver-side graph) beyond them.
 
     ``pairs=`` injects a precomputed verified-edge frame (id_a, id_b)
     so a pipeline deriving clusters, keep-best survivors, AND the
@@ -957,8 +881,9 @@ def cluster_keep_best(
 ) -> DataFrame:
     """Near-dup dedup with a quality-aware survivor: label clusters via
     `near_dup_clusters` (LSH candidates → exact-Jaccard verify →
-    min-label CC), then keep the HIGHEST `quality_score` member of each
-    cluster (doc_id breaks ties) instead of the min-id convention.
+    connected components), then keep the HIGHEST `quality_score`
+    member of each cluster (doc_id breaks ties) instead of the min-id
+    convention.
     Complements `curation.dedup_keep_best` (exact-dup groups) at the
     near-dup level — the form a curation pipeline actually wants, since
     near-dup cluster members genuinely differ in quality.

@@ -814,7 +814,7 @@ def ahash_text_batch(texts: list[str], offset: int = 0) -> list[str]:
 def audio_fp_text_batch(texts: list[str]) -> list[str]:
     """Vectorized ``_audio_fp_one(wav_from_codes(codes))`` where codes
     are ``image_tile_blob``'s clamped codepoints of text[:64] — the
-    synth+fingerprint composition every fused entry stage runs.
+    synth+fingerprint composition :func:`synth_media_hashes` runs.
     Skipping the per-row RIFF write/read round-trip is value-identical
     BY CONSTRUCTION: ``wav_from_codes`` pins sample j = (codes[j] -
     128) * 256 exactly through 16-bit PCM, so energy, mean (int
@@ -825,6 +825,82 @@ def audio_fp_text_batch(texts: list[str]) -> list[str]:
     en = samples * samples
     mean = en.sum(axis=1) / en.shape[1]
     return _bits_to_hash_strings(en >= mean[:, None])
+
+
+def synth_media_hashes(
+    docs: DataFrame,
+    frames: int = 1,
+    require_text: bool = False,
+    image: bool = True,
+    audio: bool = False,
+) -> DataFrame:
+    """documents-shaped frame → per-document synthetic-media hashes in
+    ONE Arrow ``mapInPandas`` stage — the one synth+hash body behind
+    every image, video and audio query (a drift between them would
+    silently hash different tiles).
+
+    Frame f is the 8×8 tile of the 64-char text block at offset 64·f
+    (``image_tile_blob``); it is emitted when the text reaches the
+    offset (padding-only frames can't create false sharing), except
+    frame 0, which is emitted for every document unless
+    ``require_text``. ``image`` adds the tile aHash (``ahash``, via
+    ``ahash_text_batch``); ``audio`` adds the energy-sign fingerprint
+    of the frame-0 WAV (``afp``, via ``audio_fp_text_batch``; null on
+    later frames). Both kernels are bit-identical to the per-row
+    blob compositions (pinned by test) and never yield None, so no
+    ``decode_ok`` column is emitted — every consumer reads a missing
+    one as all-decoded.
+
+    The output schema follows from the arguments: (doc_id[, frame]
+    [, ahash][, afp][, has_text]). ``frame`` and ``has_text`` (the
+    block is non-empty) appear only when ungated frame-0 rows mix
+    with text-gated later frames (``frames > 1`` and not
+    ``require_text``), the one shape whose consumers must tell the
+    rows apart. So no caller ships or computes a column it drops.
+
+    The parallelizing repartition moves the light (doc_id, text) rows
+    BEFORE the Python stage, so the hash loop runs on every core
+    instead of a small scan's single task, and the tile/WAV blobs
+    never cross the JVM↔Python boundary. Rows are emitted per frame
+    block, a partition-internal order no consumer observes."""
+    tagged = frames > 1 and not require_text
+    schema = ", ".join(
+        f
+        for f, on in (
+            ("doc_id LONG", True),
+            ("frame INT", tagged),
+            ("ahash STRING", image),
+            ("afp STRING", audio),
+            ("has_text BOOLEAN", tagged),
+        )
+        if on
+    )
+
+    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            ids = pdf["doc_id"].to_numpy()
+            texts = [t or "" for t in pdf["text"]]
+            parts = []
+            for f in range(frames):
+                sub_ids, sub_txt = ids, texts
+                if f > 0 or require_text:
+                    keep = [j for j, t in enumerate(texts) if len(t) > 64 * f]
+                    sub_ids, sub_txt = ids[keep], [texts[j] for j in keep]
+                cols = {"doc_id": sub_ids}
+                if tagged:
+                    cols["frame"] = f
+                if image:
+                    cols["ahash"] = ahash_text_batch(sub_txt, 64 * f)
+                if audio:
+                    cols["afp"] = audio_fp_text_batch(sub_txt) if f == 0 else None
+                if tagged:
+                    cols["has_text"] = [len(t) > 64 * f for t in sub_txt]
+                parts.append(pd.DataFrame(cols))
+            yield pd.concat(parts) if len(parts) > 1 else parts[0]
+
+    return ensure_min_partitions(docs.select("doc_id", "text")).mapInPandas(
+        gen, schema
+    )
 
 
 def audio_fingerprint(

@@ -199,6 +199,33 @@ def lsh_topk(
     )
 
 
+def _recall_per_query(truth: DataFrame, approx: DataFrame) -> DataFrame:
+    """(query_id, n_truth, n_hits, recall) of an approximate top-k
+    against its exact truth: per query, the truth size, how many truth
+    neighbors the approximate side found, and their ratio rounded to
+    6 places. Both inputs are (query_id, neighbor_id[, …]) frames of
+    n_queries×k rows — the one recall measurement every *_recall_check
+    audit runs."""
+    hits = truth.select("query_id", "neighbor_id").join(
+        approx.select("query_id", "neighbor_id").withColumn("_hit", F.lit(1)),
+        ["query_id", "neighbor_id"],
+        "left",
+    )
+    return (
+        hits.groupBy("query_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_truth"),
+            F.sum(F.coalesce(F.col("_hit"), F.lit(0))).alias("n_hits"),
+        )
+        .select(
+            "query_id",
+            "n_truth",
+            F.col("n_hits").cast("bigint").alias("n_hits"),
+            F.round(F.col("n_hits") / F.col("n_truth"), 6).alias("recall"),
+        )
+    )
+
+
 def ivf_recall_check(
     embeddings: DataFrame,
     k: int = 5,
@@ -225,24 +252,12 @@ def ivf_recall_check(
         centroids=centroids,
     )
     bf = brute_force_topk(embeddings, k, n_queries, id_col, vec_col)
-    hits = bf.select("query_id", "neighbor_id").join(
-        ivf.select("query_id", "neighbor_id").withColumn("_hit", F.lit(1)),
-        ["query_id", "neighbor_id"],
-        "left",
-    )
-    return (
-        hits.groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_truth"),
-            F.sum(F.coalesce(F.col("_hit"), F.lit(0))).alias("_hits"),
-        )
-        .select(
-            "query_id",
-            "n_truth",
-            (F.col("_hits") / F.col("n_truth") >= F.lit(min_recall)).alias(
-                "recall_ok"
-            ),
-        )
+    return _recall_per_query(bf, ivf).select(
+        "query_id",
+        "n_truth",
+        (F.col("n_hits") / F.col("n_truth") >= F.lit(min_recall)).alias(
+            "recall_ok"
+        ),
     )
 
 
@@ -1010,24 +1025,7 @@ def ivfpq_rerank_recall_check(
         codebooks=codebooks,
     )
     truth = l2_brute_force_topk(embeddings, k, n_queries, id_col, vec_col)
-    hits = truth.select("query_id", "neighbor_id").join(
-        rr.select("query_id", "neighbor_id").withColumn("_hit", F.lit(1)),
-        ["query_id", "neighbor_id"],
-        "left",
-    )
-    return (
-        hits.groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_truth"),
-            F.sum(F.coalesce(F.col("_hit"), F.lit(0))).alias("n_hits"),
-        )
-        .select(
-            "query_id",
-            "n_truth",
-            F.col("n_hits").cast("bigint").alias("n_hits"),
-            F.round(F.col("n_hits") / F.col("n_truth"), 6).alias("recall"),
-        )
-    )
+    return _recall_per_query(truth, rr)
 
 
 def pq_random_codebooks(
@@ -1070,11 +1068,10 @@ def semantic_dedup(
     sizes are the redundancy audit.
 
     Reuses the text pipeline's :func:`dedup.connected_components`
-    (driver union-find for bounded edge sets; O(diameter)
-    min-label-propagation rounds, one node-id shuffle join per round,
-    beyond it) on the embedding near-dup edge list — the same scale
-    story, swapping the shingle-LSH candidate generator for the
-    sign-LSH one."""
+    (driver union-find for bounded edge sets; O(log diameter)
+    star-contraction rounds beyond it) on the embedding near-dup edge
+    list — the same scale story, swapping the shingle-LSH candidate
+    generator for the sign-LSH one."""
     from hermod_spark.operators.dedup import connected_components
 
     pairs = embedding_near_dups(
@@ -1365,24 +1362,7 @@ def pq_recall_check(
         codebooks=codebooks,
     )
     truth = l2_brute_force_topk(embeddings, k, n_queries, id_col, vec_col)
-    hits = truth.select("query_id", "neighbor_id").join(
-        pq.select("query_id", "neighbor_id").withColumn("_hit", F.lit(1)),
-        ["query_id", "neighbor_id"],
-        "left",
-    )
-    return (
-        hits.groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_truth"),
-            F.sum(F.coalesce(F.col("_hit"), F.lit(0))).alias("n_hits"),
-        )
-        .select(
-            "query_id",
-            "n_truth",
-            F.col("n_hits").cast("bigint").alias("n_hits"),
-            F.round(F.col("n_hits") / F.col("n_truth"), 6).alias("recall"),
-        )
-    )
+    return _recall_per_query(truth, pq)
 
 
 def lsh_recall_check(
@@ -1411,24 +1391,7 @@ def lsh_recall_check(
         id_col=id_col, vec_col=vec_col, dim=dim,
     )
     truth = brute_force_topk(embeddings, k, n_queries, id_col, vec_col)
-    hits = truth.select("query_id", "neighbor_id").join(
-        approx.select("query_id", "neighbor_id").withColumn("_hit", F.lit(1)),
-        ["query_id", "neighbor_id"],
-        "left",
-    )
-    return (
-        hits.groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_truth"),
-            F.sum(F.coalesce(F.col("_hit"), F.lit(0))).alias("n_hits"),
-        )
-        .select(
-            "query_id",
-            "n_truth",
-            F.col("n_hits").cast("bigint").alias("n_hits"),
-            F.round(F.col("n_hits") / F.col("n_truth"), 6).alias("recall"),
-        )
-    )
+    return _recall_per_query(truth, approx)
 
 
 def ivf_recall_curve(
@@ -1897,24 +1860,7 @@ def knn_join_recall_check(
         id_col=id_col, vec_col=vec_col, dim=dim, max_bucket=max_bucket,
     ).filter(F.col("query_id") < n_check)
     truth = brute_force_topk(embeddings, k, n_check, id_col, vec_col)
-    hits = truth.select("query_id", "neighbor_id").join(
-        approx.select("query_id", "neighbor_id").withColumn("_hit", F.lit(1)),
-        ["query_id", "neighbor_id"],
-        "left",
-    )
-    return (
-        hits.groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_truth"),
-            F.sum(F.coalesce(F.col("_hit"), F.lit(0))).alias("n_hits"),
-        )
-        .select(
-            "query_id",
-            "n_truth",
-            F.col("n_hits").cast("bigint").alias("n_hits"),
-            F.round(F.col("n_hits") / F.col("n_truth"), 6).alias("recall"),
-        )
-    )
+    return _recall_per_query(truth, approx)
 
 
 def knn_classify(

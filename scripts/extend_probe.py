@@ -59,6 +59,7 @@ def main() -> None:
     from hermod_spark.data import table
     from hermod_spark.operators import dedup as D
     from hermod_spark.operators import fpindex as FPI
+    from hermod_spark.operators import multimodal as MM
     from hermod_spark.operators import similarity as S
     from hermod_spark.operators import textindex as TI
 
@@ -115,13 +116,13 @@ def main() -> None:
     probe(
         "extend_fp_index",
         lambda sf, p: FPI.save_fp_index(
-            E._image_hashes_of(
+            MM.synth_media_hashes(
                 docs(sf).filter(F.col("doc_id") % 10 != 7)
             ),
             p,
         ),
         lambda p: FPI.extend_fp_index(
-            E._image_hashes_of(snap_docs), p
+            MM.synth_media_hashes(snap_docs), p
         ),
     )
 

@@ -119,35 +119,9 @@ def test_simhash_deterministic_and_near(spark):
     assert (1, 3) not in pairs
 
 
-def test_min_label_propagation_chain_converges_within_diameter(spark):
-    """Convergence guard: on a 10-node chain (diameter 9) min-label
-    propagation must finish in ≤ diameter+1 rounds (+1 is the no-change
-    detection round) and label every node with the chain minimum. A
-    regression to a non-converging shape trips the bound, not the
-    20-round safety cap."""
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 10)], "id_a LONG, id_b LONG"
-    )
-    labels, rounds = dedup.min_label_propagation(pairs, max_iterations=20)
-    assert rounds <= 10
-    got = {r["node"]: r["label"] for r in labels.collect()}
-    assert got == {i: 1 for i in range(1, 11)}
-
-
-def test_min_label_propagation_star_converges_fast(spark):
-    """Star graphs (one canonical + N copies, the common dup shape)
-    converge in 2 rounds + detection."""
-    pairs = spark.createDataFrame(
-        [(1, i) for i in range(2, 30)], "id_a LONG, id_b LONG"
-    )
-    labels, rounds = dedup.min_label_propagation(pairs, max_iterations=20)
-    assert rounds <= 3
-    assert {r["label"] for r in labels.collect()} == {1}
-
-
 def test_connected_components_driver_and_distributed_agree(spark):
     """VERDICT r8 #9: the hybrid CC's two execution paths — driver
-    union-find (bounded edges) and distributed min-label propagation —
+    union-find (bounded edges) and distributed star contraction —
     produce identical labels on chains, stars, multiple components,
     and self-loops."""
     edges = (
@@ -211,7 +185,7 @@ def test_star_contraction_deep_path_graph_converges(spark):
 def test_star_contraction_string_ids_and_selfloops(spark):
     """Lexicographic min labels for string doc ids; self-loop-only
     nodes stay in the output labeled as themselves (node-coverage
-    parity with min_label_propagation)."""
+    parity with the driver union-find)."""
     pairs = spark.createDataFrame(
         [("b", "a"), ("b", "c"), ("z", "z")], "id_a STRING, id_b STRING"
     )
@@ -221,8 +195,9 @@ def test_star_contraction_string_ids_and_selfloops(spark):
 
 
 def test_star_contraction_round_cap_raises(spark):
-    """Exhausting max_rounds refuses (wrong clusters are never
-    returned silently), mirroring min_label_propagation's contract."""
+    """Exhausting max_rounds refuses: truncated labels would silently
+    split one cluster into several, so wrong clusters are never
+    returned."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 64)], "id_a LONG, id_b LONG"
     )
@@ -233,7 +208,7 @@ def test_star_contraction_round_cap_raises(spark):
 def test_cc_path_selection_and_parallelized_label_upload(spark):
     """VERDICT r10 #5: (a) the driver cap sits at 200k — small enough
     that the collected Row list is tens of MB, not hundreds; (b) edge
-    sets ABOVE the cap take the distributed min-label path (no
+    sets ABOVE the cap take the distributed star-contraction path (no
     driver collect); (c) the driver path ships labels back via
     sc.parallelize — the plan scans an RDD, not a pickled
     LocalTableScan embedding every tuple in the plan payload."""
@@ -735,15 +710,3 @@ def test_connected_components_driver_path_string_ids(spark):
         ("urlA", "urlA"), ("urlB", "urlA"), ("urlC", "urlA"),
         ("urlX", "urlX"), ("urlY", "urlX"),
     }
-
-
-def test_min_label_propagation_raises_on_truncation(spark):
-    """Exhausting max_iterations with updates still flowing must raise
-    (truncated labels silently split one cluster into several)."""
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 8)], "id_a LONG, id_b LONG"
-    )
-    with pytest.raises(ValueError, match="not converged"):
-        dedup.min_label_propagation(chain, max_iterations=2)
-    labels, _ = dedup.min_label_propagation(chain, max_iterations=10)
-    assert {r["label"] for r in labels.collect()} == {1}

@@ -139,63 +139,117 @@ def test_each_query_surface_is_canon_safe(built_schemas, name):
     assert not bad, bad
 
 
+def _image_blobs_of(docs, frames=1, require_text=False):
+    """Parity reference: documents-shaped frame → (doc_id, content)
+    tile blobs, one row per emitted frame. Frame f is the tile of the
+    64-char text block at offset 64·f; emitted when the text reaches
+    the offset, except frame 0 which is always emitted unless
+    ``require_text``."""
+    import pandas as pd
+
+    from hermod_spark.operators.multimodal import image_tile_blob
+
+    def gen(it):
+        for pdf in it:
+            ids, blobs = [], []
+            for i, t in zip(pdf["doc_id"], pdf["text"]):
+                t = t or ""
+                for f in range(frames):
+                    if len(t) > 64 * f or (f == 0 and not require_text):
+                        ids.append(i)
+                        blobs.append(image_tile_blob(t[64 * f : 64 * (f + 1)]))
+            yield pd.DataFrame({"doc_id": ids, "content": blobs})
+
+    return docs.select("doc_id", "text").mapInPandas(
+        gen, "doc_id LONG, content BINARY"
+    )
+
+
+def _audio_blobs_of(docs):
+    """Parity reference: documents-shaped frame → (doc_id, content)
+    REAL WAV blobs. Sample j of doc d is (code_j - 128)·256 where
+    code_j = min(codepoint of text char j, 255), space(32)-padded to
+    64 samples."""
+    import pandas as pd
+
+    from hermod_spark.operators.multimodal import wav_from_codes
+
+    def gen(it):
+        for pdf in it:
+            blobs = []
+            for t in pdf["text"]:
+                t = (t or "")[:64]
+                codes = [min(ord(ch), 255) for ch in t] + [32] * (64 - len(t))
+                blobs.append(wav_from_codes(codes))
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": blobs})
+
+    return docs.select("doc_id", "text").mapInPandas(
+        gen, "doc_id LONG, content BINARY"
+    )
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _decoded_rows(ref, hash_col):
+    """(doc_id, hash) rows of a blob-reference hasher output, asserting
+    the reference decoded every row (the kernel emits no decode_ok)."""
+    got = ref.collect()
+    assert all(r.decode_ok for r in got)
+    return sorted((r.doc_id, r[hash_col]) for r in got)
+
+
 def test_fused_hash_stages_match_two_stage_composition(spark):
-    """r14 optimization parity pin: the fused synth+hash Arrow stages
-    (`_image_hashes_of` / `_audio_fps_of`) must emit EXACTLY the rows
-    of the two-stage compositions they replaced (same kernels, one
-    boundary crossing) — a drift here silently re-hashes the whole
-    multimodal family differently from the oracle."""
+    """Parity pin: the one synth+hash Arrow kernel
+    (`synth_media_hashes`) must emit EXACTLY the (doc_id, hash) rows
+    of the two-stage blob compositions it replaced, in its image,
+    video and audio shapes — a drift here silently re-hashes the
+    whole multimodal family differently from the oracle."""
     from hermod_spark.data import table
     from hermod_spark.operators.multimodal import (
         audio_fingerprint,
         image_ahash,
+        synth_media_hashes,
     )
 
     docs = table(spark, SF_SMOKE, "documents")
 
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    assert rows(E._image_hashes_of(docs)) == rows(
-        image_ahash(E._image_blobs_of(docs))
+    assert _rows(synth_media_hashes(docs)) == _decoded_rows(
+        image_ahash(_image_blobs_of(docs)), "ahash"
     )
-    assert rows(E._image_hashes_of(docs, frames=3, require_text=True)) == rows(
-        image_ahash(E._image_blobs_of(docs, frames=3, require_text=True))
+    assert _rows(
+        synth_media_hashes(docs, frames=3, require_text=True)
+    ) == _decoded_rows(
+        image_ahash(_image_blobs_of(docs, frames=3, require_text=True)),
+        "ahash",
     )
-    assert rows(E._audio_fps_of(docs)) == rows(
-        audio_fingerprint(E._audio_blobs_of(docs))
-    )
+    assert _rows(
+        synth_media_hashes(docs, image=False, audio=True)
+    ) == _decoded_rows(audio_fingerprint(_audio_blobs_of(docs)), "afp")
 
 
 def test_mm_shared_pass_matches_per_leg_fused_stages(spark):
-    """r14 optimization parity pin for the report's shared pass: the
-    frame-0 rows of `_mm_hashes_of` must equal `_image_hashes_of` ∪
-    `_audio_fps_of`, and its has_text rows must equal the video leg's
-    `_image_hashes_of(frames=3, require_text=True)` — same kernels,
-    one corpus scan."""
+    """Parity pin for the report's shared pass: the frame-0 rows of
+    `synth_media_hashes(frames=3, audio=True)` must equal the image
+    and audio shapes, and its has_text rows must equal the video
+    shape (frames=3, require_text=True) — same kernels, one corpus
+    scan."""
     from pyspark.sql import functions as F
 
     from hermod_spark.data import table
+    from hermod_spark.operators.multimodal import synth_media_hashes
 
     docs = table(spark, SF_SMOKE, "documents")
-    mm = E._mm_hashes_of(docs).localCheckpoint()
+    mm = synth_media_hashes(docs, frames=3, audio=True).localCheckpoint()
     f0 = mm.filter(F.col("frame") == 0)
 
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    assert rows(
-        f0.select(
-            "doc_id", "ahash", F.col("ahash").isNotNull().alias("decode_ok")
-        )
-    ) == rows(E._image_hashes_of(docs))
-    assert rows(
-        f0.select(
-            "doc_id", "afp", F.col("afp").isNotNull().alias("decode_ok")
-        )
-    ) == rows(E._audio_fps_of(docs))
-    assert rows(
-        mm.filter(F.col("has_text")).select(
-            "doc_id", "ahash", F.col("ahash").isNotNull().alias("decode_ok")
-        )
-    ) == rows(E._image_hashes_of(docs, frames=3, require_text=True))
+    assert _rows(f0.select("doc_id", "ahash")) == _rows(
+        synth_media_hashes(docs)
+    )
+    assert _rows(f0.select("doc_id", "afp")) == _rows(
+        synth_media_hashes(docs, image=False, audio=True)
+    )
+    assert _rows(mm.filter(F.col("has_text")).select("doc_id", "ahash")) == (
+        _rows(synth_media_hashes(docs, frames=3, require_text=True))
+    )

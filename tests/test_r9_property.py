@@ -1,6 +1,6 @@
 """Property tests for the r9 items: two-pass CCNet tertiles ≡ exact
 rank under arbitrary corpora, hybrid connected components (driver
-union-find ≡ distributed min-label) under random graphs, epoch
+union-find ≡ distributed star contraction) under random graphs, epoch
 materialization counts matching the plan, and spool-index seek ≡ scan
 under adversarial line shapes."""
 
@@ -53,7 +53,7 @@ def test_ccnet_twopass_equals_exact_rank_property(spark, docs):
 )
 @_settings
 def test_hybrid_cc_paths_agree_property(spark, edges):
-    """Driver union-find and the distributed min-label loop produce
+    """Driver union-find and the distributed star-contraction loop produce
     the same (node → min-reachable-node) labels on arbitrary graphs
     (self-loops, duplicate edges, multiple components)."""
     pairs = spark.createDataFrame(
