@@ -10,11 +10,10 @@ the route planner. Provided here:
   props), used by tests and the oracle;
 - ``message_stream`` — the same shape as a Structured Streaming
   source (file/rate for tests; a Kafka reader maps 1:1 — Kafka rows
-  already carry topic/value/timestamp);
-- ``mqtt_source`` — a stub documenting the production wiring (paho →
-  Kafka bridge, or a Spark 4 Python DataSource); no broker exists in
-  this environment, so it raises with instructions rather than
-  pretending.
+  already carry topic/value/timestamp).
+
+Live MQTT and recorded-log replay are the Python DataSources in
+:mod:`hermod_spark.sources.mqtt`.
 """
 
 from __future__ import annotations
@@ -68,18 +67,6 @@ def message_stream(
     if schema is not None:
         reader = reader.schema(schema)
     return reader.parquet(path)
-
-
-def mqtt_source(*_args, **_kwargs):
-    """Live MQTT ingestion lives in :mod:`hermod_spark.sources.mqtt`:
-    ``spark.readStream.format('mqtt')`` with a ``spool`` option (the
-    engine half — offsets/partitions/reads/recovery — is implemented
-    and tested against an in-process broker double; only the paho
-    socket is import-gated since this container ships no broker and no
-    paho). Alternatives: the ``mqtt_replay`` source over a recorded
-    log, or an MQTT→Kafka bridge with
-    ``spark.readStream.format('kafka')``."""
-    raise NotImplementedError(mqtt_source.__doc__)
 
 
 def render_replay_spool(spark: SparkSession, sf_dir: str, path: str) -> int:

@@ -121,7 +121,7 @@ def file_client_factory(options) -> FileMqttClient:
     """Entry point for the live source's ``clientFactory`` option:
     ``clientFactory=hermod_spark.sources.mqtt_testing:file_client_factory``
     plus ``brokerDir=<dir>``."""
-    broker_dir = options.get("brokerdir") or options.get("brokerDir")
+    broker_dir = options.get("brokerDir")
     if not broker_dir:
         raise ValueError("file_client_factory requires a 'brokerDir' option")
     return FileMqttClient(broker_dir)

@@ -47,8 +47,9 @@ _EMPTY_CHAIN = {"generations": [], "seq": -1}
 
 
 class IndexCache:
-    """Process-lifetime memo of build-once artifacts: persisted index
-    paths, maintenance-state dirs, small trained models. Building once
+    """Process-lifetime memo of build-once artifacts: loaded index
+    handles, persisted index paths, maintenance-state dirs, small
+    trained models. Building once
     and serving every later call from the same artifact is the
     train-once/serve-many shape these indexes exist for; rebuilding per
     call would time the corpus pass into every serve.
@@ -67,7 +68,9 @@ class IndexCache:
     process lifetime. A hit never re-checks the input, so a harness
     that regenerated parquet in place mid-process would be served the
     old artifact; regeneration happens between processes, and anything
-    else must use a fresh key."""
+    else must use a fresh key. A cached DataFrame (a loaded index
+    handle) is bound to the SparkContext that built it, so a process
+    that stops its context must not serve such a key again."""
 
     def __init__(self) -> None:
         self._values: dict[Hashable, Any] = {}

@@ -194,7 +194,12 @@ def test_live_reader_offsets_partitions_read(fake_broker, tmp_path):
         # partitions chunk by maxMessagesPerBatch within a range
         parts = reader.partitions({"index": 0}, {"index": 3})
         assert [(p.start, p.end) for p in parts] == [(0, 2), (2, 3)]
-        rows = [r for p in parts for r in reader.read(p)]
+        # the bridge stamps unix seconds, so its spool takes the Arrow
+        # parse, never the per-line fallback
+        before = dict(M.READ_PATH_COUNTS)
+        rows = [tuple(r.values()) for p in parts for r in _drain(reader, p)]
+        assert M.READ_PATH_COUNTS["arrow"] == before["arrow"] + len(parts)
+        assert M.READ_PATH_COUNTS["fallback"] == before["fallback"]
         assert [r[1] for r in rows] == ["sensors/a/1", "sensors/b/2", "sensors/c/3"]
         assert rows[0][4] == '{"temperature": 20.5}'  # bytes decoded
         assert rows[0][2] == 1 and rows[3 - 1][3] is True  # qos, retain
@@ -338,19 +343,24 @@ def test_live_source_real_broker_e2e(spark, tmp_path):
 # ------------------------------------------------------- spool index
 
 
+def _range_rows(path, lo, hi):
+    """One range read's rows, as the per-line parser's tuples."""
+    return [
+        tuple(r.values()) for b in M._read_range(path, lo, hi) for r in b.to_pylist()
+    ]
+
+
 def test_spool_index_seek_equals_scan(tmp_path):
     """Range reads through the offset index must be byte-identical to
     the scan path, at anchors, mid-stride, and across strides."""
-    from hermod_spark.sources.mqtt import (
-        _load_index, _read_range, write_spool_index,
-    )
+    from hermod_spark.sources.mqtt import _load_index, write_spool_index
 
     p = str(tmp_path / "spool.jsonl")
     with open(p, "w", encoding="utf-8") as fh:
         for i in range(2500):
             fh.write('{"topic": "t/%d", "payload": "%d", "time": %d.5}\n' % (i, i, i))
     scan = {
-        rng: list(_read_range(p, *rng))
+        rng: _range_rows(p, *rng)
         for rng in [(0, 10), (1000, 1100), (1023, 1025), (2048, 2500), (1500, 1501)]
     }
     total = write_spool_index(p, stride=1024)
@@ -359,7 +369,7 @@ def test_spool_index_seek_equals_scan(tmp_path):
     assert idx is not None and idx[0] == 1024 and idx[1] == 2500
     assert len(idx[2]) == 3  # offsets for lines 0, 1024, 2048
     for rng, want in scan.items():
-        assert list(_read_range(p, *rng)) == want, rng
+        assert _range_rows(p, *rng) == want, rng
 
 
 def test_spool_index_stale_falls_back(tmp_path):
@@ -408,23 +418,24 @@ def test_spool_index_same_size_rewrite_is_stale(tmp_path):
 
 
 def test_arrow_fast_path_used_and_equal_to_python_path(tmp_path):
-    """A clean float-time spool takes the Arrow fast path (RecordBatch
-    yields — zero per-row Python); its values equal the per-line path
-    exactly. An ISO-time / poisoned spool falls back to per-line rows
-    with the skip-bad-lines contract intact."""
+    """A clean float-time spool takes the Arrow parse; its values equal
+    the per-line parser's exactly. An ISO-time / poisoned spool falls
+    back per line, still as RecordBatches, with the skip-bad-lines
+    contract intact."""
     import pyarrow as pa
 
     from hermod_spark.sources import mqtt as M
 
     clean = str(tmp_path / "clean.jsonl")
+    lines = [
+        '{"time": %d.25, "topic": "t/%d", "qos": 1, "retain": false,'
+        ' "payload": "p%d"}' % (i, i, i)
+        for i in range(50)
+    ]
     with open(clean, "w", encoding="utf-8") as fh:
-        for i in range(50):
-            fh.write(
-                '{"time": %d.25, "topic": "t/%d", "qos": 1, "retain": false,'
-                ' "payload": "p%d"}\n' % (i, i, i)
-            )
+        fh.write("".join(line + "\n" for line in lines))
     before = dict(M.READ_PATH_COUNTS)
-    out = list(M._read_range_auto(clean, 5, 45))
+    out = list(M._read_range(clean, 5, 45))
     assert out and all(isinstance(b, pa.RecordBatch) for b in out)
     # the path counter proves the fast path FIRED (VERDICT r9 #2: the
     # silent fallback must be observable, not inferred)
@@ -438,9 +449,17 @@ def test_arrow_fast_path_used_and_equal_to_python_path(tmp_path):
     # tz-AWARE instants on both paths (ADVICE r9): the Arrow batch
     # carries timestamp('us', tz='UTC'), identical to the per-line
     # datetimes with no tz-stripping needed
-    want = list(M._read_range(clean, 5, 45))
+    want = [M._parse_line(line) for line in lines[5:45]]
     assert got == want and len(got) == 40
     assert all(t.tzinfo is not None for t, *_ in got)
+
+    # full-precision unix seconds (time.time() stamps) round to the
+    # microsecond exactly as datetime.fromtimestamp does
+    precise = ['{"time": %r, "topic": "p"}' % (1760000000 + i / 7) for i in range(200)]
+    with open(clean, "w", encoding="utf-8") as fh:
+        fh.write("".join(line + "\n" for line in precise))
+    got = [r["time"] for b in M._read_range(clean, 0, 200) for r in b.to_pylist()]
+    assert got == [M._parse_line(line)[0] for line in precise]
 
     dirty = str(tmp_path / "dirty.jsonl")
     with open(dirty, "w", encoding="utf-8") as fh:
@@ -448,10 +467,13 @@ def test_arrow_fast_path_used_and_equal_to_python_path(tmp_path):
         fh.write("NOT JSON AT ALL\n")
         fh.write('{"time": 5.0, "topic": "b", "payload": "y"}\n')
     before = dict(M.READ_PATH_COUNTS)
-    rows = list(M._read_range_auto(dirty, 0, 3))
-    assert all(isinstance(r, tuple) for r in rows)  # fallback: row tuples
-    assert [r[1] for r in rows] == ["a", "b"]  # poisoned line skipped
+    out = list(M._read_range(dirty, 0, 3))
+    assert all(isinstance(b, pa.RecordBatch) for b in out)  # fallback too
+    rows = [r for b in out for r in b.to_pylist()]
+    assert [r["topic"] for r in rows] == ["a", "b"]  # poisoned line skipped
+    assert rows[0]["time"] == dt.datetime(2024, 1, 1, tzinfo=UTC)  # ISO read
     assert M.READ_PATH_COUNTS["fallback"] == before["fallback"] + 1
+    assert M.READ_PATH_COUNTS["arrow"] == before["arrow"]
 
 
 def test_bench_shaped_spool_takes_arrow_path(tmp_path, spark):
@@ -467,7 +489,7 @@ def test_bench_shaped_spool_takes_arrow_path(tmp_path, spark):
     n = render_replay_spool(spark, "/root/testdata/sf0.001", spool)
     assert n > 0
     before = dict(M.READ_PATH_COUNTS)
-    batches = list(M._read_range_auto(spool, 0, n))
+    batches = list(M._read_range(spool, 0, n))
     assert M.READ_PATH_COUNTS["arrow"] == before["arrow"] + 1
     assert M.READ_PATH_COUNTS["fallback"] == before["fallback"]
     assert sum(b.num_rows for b in batches) == n
@@ -606,13 +628,13 @@ def test_sharded_stream_offsets_per_shard_and_append_safe(tmp_path):
         ("shard-0001.jsonl", 0, 1),
     ]
     rows = [row for p in parts for row in _drain(r, p)]
-    assert sorted(_payload_of(x) for x in rows) == ["1", "3"]
+    assert sorted(x["payload"] for x in rows) == ["1", "3"]
     # second trigger reaches shard-0000's tail
     end_b = r.latestOffset()
     assert end_b["shards"]["shard-0000.jsonl"] == 2
     parts_b = r.partitions(end, end_b)
     rows_b = [row for p in parts_b for row in _drain(r, p)]
-    assert [_payload_of(x) for x in rows_b] == ["2"]
+    assert [x["payload"] for x in rows_b] == ["2"]
     end = end_b
 
     # append to shard-0001 only
@@ -623,14 +645,14 @@ def test_sharded_stream_offsets_per_shard_and_append_safe(tmp_path):
     assert end2["shards"]["shard-0001.jsonl"] == 2
     parts2 = r.partitions(end, end2)
     rows2 = [row for p in parts2 for row in _drain(r, p)]
-    assert [_payload_of(x) for x in rows2] == ["4"]
+    assert [x["payload"] for x in rows2] == ["4"]
 
     # a NEW shard appearing between triggers joins at 0
     (d / "shard-0002.jsonl").write_text('{"topic": "c", "payload": "5"}\n')
     end3 = r.latestOffset()
     parts3 = r.partitions(end2, end3)
     rows3 = [row for p in parts3 for row in _drain(r, p)]
-    assert [_payload_of(x) for x in rows3] == ["5"]
+    assert [x["payload"] for x in rows3] == ["5"]
 
 
 def test_sharded_stream_empty_batch_has_sentinel_partition(tmp_path):
@@ -670,17 +692,9 @@ def test_sharded_render_replaces_existing_dir_atomically(spark, tmp_path):
 
 
 def _drain(reader, partition):
-    """Materialize a stream-reader partition: tuples or Arrow batches
-    (the Arrow fast path yields RecordBatches)."""
-    for item in reader.read(partition):
-        if hasattr(item, "to_pylist"):
-            yield from item.to_pylist()
-        else:
-            yield item
-
-
-def _payload_of(row):
-    return row["payload"] if isinstance(row, dict) else row[4]
+    """A stream-reader partition's RecordBatches, as row dicts."""
+    for batch in reader.read(partition):
+        yield from batch.to_pylist()
 
 
 # ---- gzip shards + checkpoint-format guard (r11) ----
@@ -776,15 +790,16 @@ def test_single_file_checkpoint_rejected_on_shard_dir(tmp_path):
     assert len(parts) == 1
 
 
-def test_gz_chunked_read_bounded_memory_and_poisoned_chunk(tmp_path, monkeypatch):
-    """r11 review: gz ranges stream in bounded chunks (one decompress,
-    never the whole shard in memory) and a chunk the Arrow parser
-    rejects falls back per-LINE for that chunk only — output identical
-    and exactly-once, all RecordBatches."""
+@pytest.mark.parametrize("name", ["big.jsonl.gz", "big.jsonl"], ids=["gz", "plain"])
+def test_gz_chunked_read_bounded_memory_and_poisoned_chunk(tmp_path, monkeypatch, name):
+    """Plain and gz ranges alike stream in bounded chunks (never the
+    whole range in memory; one decompress for gz) and a chunk the Arrow
+    parser rejects falls back per-LINE for that chunk only — output
+    identical and exactly-once, all RecordBatches."""
     import gzip as _gzip
     import json as _json
 
-    p = tmp_path / "big.jsonl.gz"
+    p = tmp_path / name
     lines = []
     for i in range(50):
         if i == 23:
@@ -793,15 +808,17 @@ def test_gz_chunked_read_bounded_memory_and_poisoned_chunk(tmp_path, monkeypatch
             lines.append(_json.dumps(
                 {"time": 1700000000.0 + i, "topic": "t", "payload": f"p{i}"}
             ))
-    with _gzip.open(p, "wt") as fh:
+    with (_gzip.open if name.endswith(".gz") else open)(p, "wt") as fh:
         fh.write("\n".join(lines) + "\n")
 
-    monkeypatch.setattr(M, "GZ_CHUNK_BYTES", 256)  # force many chunks
-    batches = list(M._read_range_auto(str(p), 0, 10**9))
+    monkeypatch.setattr(M, "CHUNK_BYTES", 256)  # force many chunks
+    before = dict(M.READ_PATH_COUNTS)
+    batches = list(M._read_range(str(p), 0, 10**9))
     assert all(hasattr(b, "num_rows") for b in batches)  # homogeneous
     assert len(batches) > 3  # chunking actually engaged
     got = [row["payload"] for b in batches for row in b.to_pylist()]
     assert got == [f"p{i}" for i in range(50) if i != 23]
+    assert M.READ_PATH_COUNTS["fallback"] == before["fallback"] + 1  # one chunk
 
 
 def test_gz_stream_single_partition_per_shard(tmp_path):
@@ -832,7 +849,7 @@ def test_gz_stream_single_partition_per_shard(tmp_path):
         rows += [x for p in parts for x in _drain(r, p)]
         start = end
         triggers += 1
-    assert triggers == 6 and [_payload_of(x) for x in rows] == [
+    assert triggers == 6 and [x["payload"] for x in rows] == [
         f"p{i}" for i in range(30)
     ]
     # without a cap (one big trigger) the shard is STILL one partition
